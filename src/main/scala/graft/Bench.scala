@@ -53,15 +53,6 @@ object Bench {
     }
   }
 
-  /** Default bench heap, shared with build.sbt's javaOptions: 0.75 GB per
-    * local task thread, floor 8g (the round-12 ground truth — a constant 8g
-    * starves 32 concurrent tasks while 8 run comfortably). */
-  private def defaultHeap: String = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(c => scala.util.Try(c.trim.toInt).toOption).getOrElse(32)
-    s"${math.max(8, (cpus * 3 + 3) / 4)}g"
-  }
-
   // every emitted JSON line is also teed to target/bench.json (parent
   // runs only — a forked single-query child would clobber it): the round
   // artifact's stdout tail is truncation-prone and sbt prefixes each
@@ -161,7 +152,9 @@ object Bench {
     val metrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     val fns = SparkEntry.queries
-    val results = selectedNames.map { name =>
+    // removed again once the loop is done: repeated in-JVM invocations
+    // must not accumulate listeners
+    val results = try selectedNames.map { name =>
       val fn = fns(name)
       // hash EVERY output column (same probe as Stress.measure): a bare
       // count(1) lets Catalyst prune unreferenced payload columns out of
@@ -211,7 +204,7 @@ object Bench {
       QRes(name, sec, rows,
         occ(plan, "ShuffleQueryStage"), occ(plan, "BroadcastQueryStage"),
         spillMb, peakMb)
-    }
+    } finally spark.sparkContext.removeSparkListener(metrics)
     // forked attribution for the chain's five most expensive queries:
     // chain position inflates heavy parse queries with identical plans
     // (JVM state), so the artifact records a fresh-JVM number alongside.
@@ -255,9 +248,10 @@ object Bench {
       getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath
     val cp = s"$classes:/opt/spark/jars/*"
     val javaBin = System.getProperty("java.home") + "/bin/java"
-    // same concurrency-scaled default as build.sbt gives the parent: the
-    // child runs the identical local[$SPARK_GRAFT_CPUS] task-thread count
-    val xmx = s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", defaultHeap)}"
+    // the child runs the identical local[$SPARK_GRAFT_CPUS] task-thread
+    // count, so it gets the parent's heap (build.sbt sizes it)
+    val xmx = "-Xmx" + sys.env.getOrElse("SPARK_DRIVER_MEM",
+      s"${Runtime.getRuntime.maxMemory / (1L << 20)}m")
     val pb = new ProcessBuilder(javaBin, xmx,
       "-XX:ReservedCodeCacheSize=512m",
       "--add-opens=java.base/java.lang=ALL-UNNAMED",

@@ -9,9 +9,13 @@ import org.apache.spark.sql.SparkSession
   * re-plan at runtime, and auto-broadcast stays enabled so dimension tables
   * (region/nation/part at TPC-H scale; type/role dictionaries in the
   * statement engine) never shuffle.
+  *
+  * `SPARK_GRAFT_CPUS` sets the local task threads; unset, it is the host's
+  * processor count.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = SparkSession
@@ -29,6 +33,9 @@ object GraftSession {
       // Spark reads it as a nanosecond epoch long under this flag.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // reliable boundaries outside a BlockScope.scoped region (batch
+      // runs) leave their checkpoint files to the ContextCleaner
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Scale dress rehearsal: the sf tests prove CORRECTNESS; this harness
   * MEASURES the 100 TB design claims on synthetically scaled data.
@@ -155,7 +156,7 @@ object Stress {
         // tier — deep enough that the hot key's single window task also
         // dominates WALL time for the plain variant, not just task bytes
         val asofRep = rep * 4
-        val ev = hotEvents(spark, dir, asofRep).localCheckpoint()
+        val ev = hotEvents(spark, dir, asofRep).boundary(eager = true)
         val purchases = ev.where(col("event_type") === "purchase")
           .select("user_id", "event_id", "ts")
         val touches = ev.where(col("event_type") =!= "purchase")

@@ -2,6 +2,7 @@ package graft.assembly
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Incremental refinement + belief maintenance — the score-bearing half of
   * the supplement story. [[IncrementalReadonly]] keeps the SERVING tables
@@ -132,13 +133,13 @@ object IncrementalBelief {
     // crash fell between the appends and the closure/agg writes
     val deltaKs = keysets(stmts, agents)
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
-    val countsLc = counts.select("mk_hash", "src", "cnt").localCheckpoint(false)
+      .boundary()
+    val countsLc = counts.select("mk_hash", "src", "cnt").boundary()
     val probe = deltaKs
       .select(col("stype"), explode(col("keys")).as("key"))
       .distinct()
       .withColumn(Shard, keyShard(col("stype"), col("key"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val probeShards = shardsOf(probe)
 
     // --- principal appends, own-key pruned guards ------------------------
@@ -148,7 +149,7 @@ object IncrementalBelief {
          refreshed(spark, db, "s_keysets")
            .filter(inShards(col(Shard), shardsOf(deltaKs)))
            .select("mk_hash"),
-         Seq("mk_hash"), "left_anti")).localCheckpoint(false)
+         Seq("mk_hash"), "left_anti")).boundary()
     ShardedStore.append(spark, db, "s_keysets", newKs, Seq(Shard))
     // a hash's s_keys rows live in the key shards its OWN keys map to, so
     // the presence guard reads just the probed slice — never a full scan
@@ -180,14 +181,14 @@ object IncrementalBelief {
       .select(col("mk_hash"))
       .distinct()
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
+      .boundary()
     // candidate universe: every statement sharing a (stype, key) with the
     // batch — includes the batch itself (its keys were appended above)
     val univ = refreshed(spark, db, "s_keysets")
       .filter(inShards(col(Shard), shardsOf(hits)))
       .join(hits.select("mk_hash"), Seq("mk_hash"), "left_semi")
       .drop(Shard)
-      .localCheckpoint(false)
+      .boundary()
     // pairs (delta, univ): one delta-anchored join, then both orientations
     // by swapping — NEVER univ × univ, which would re-pair old hot blocks
     val dSide = deltaKs
@@ -212,10 +213,10 @@ object IncrementalBelief {
     val edges = extraEdges
       .fold(keyEdges)(e => keyEdges.unionByName(e.select("desc", "anc")))
       .distinct()
-      .localCheckpoint(true)
+      .boundary(eager = true)
 
     // --- closure extension: paths through ≥1 new edge --------------------
-    def fresh(df: DataFrame) = df.localCheckpoint(true).toDF("desc", "anc")
+    def fresh(df: DataFrame) = df.boundary(eager = true).toDF("desc", "anc")
     val haveClosure = exists(spark, db, "c_by_anc")
     val seg = if (!haveClosure) edges else {
       // one-segment pairs C?∘E'∘C?: extend each new edge left with stored
@@ -261,7 +262,7 @@ object IncrementalBelief {
     val accSharded = acc
       .withColumn("anc_shard", shardOf(col("anc"), shards))
       .withColumn("desc_shard", shardOf(col("desc"), shards))
-      .localCheckpoint(false)
+      .boundary()
     def pairShards(c: String): Seq[Int] =
       shardsOf(accSharded.select(col(c).as(Shard)))
     val deltaClosure =
@@ -270,7 +271,7 @@ object IncrementalBelief {
          refreshed(spark, db, "c_by_anc")
            .filter(inShards(col(Shard), pairShards("anc_shard")))
            .select("desc", "anc"),
-         Seq("desc", "anc"), "left_anti")).localCheckpoint(true)
+         Seq("desc", "anc"), "left_anti")).boundary(eager = true)
     if (deltaClosure.filter(col("desc") === col("anc")).limit(1).count() > 0)
       sys.error("refinement graph would contain a cycle")
     ShardedStore.append(spark, db, "c_by_anc",
@@ -301,7 +302,7 @@ object IncrementalBelief {
       .unionByName(stmts.select("mk_hash"))
       .distinct()
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val ancOfDelta = pairsOrEmpty(spark, db, "c_by_desc")
       .filter(inShards(col(Shard), shardsOf(deltaH)))
       .join(deltaH.select(col("mk_hash").as("d_h")),
@@ -318,7 +319,7 @@ object IncrementalBelief {
       .unionByName(accSharded.select(col("anc").as("mk_hash")))
       .distinct()
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val affectedShards = shardsOf(affected)
 
     // --- derived rewrite: agg counts for the affected hashes, pure -------
@@ -329,7 +330,7 @@ object IncrementalBelief {
       .select(col("anc"), col("desc"))
       .unionByName(affected.select(col("mk_hash").as("anc"),
         col("mk_hash").as("desc")))
-      .localCheckpoint(false)
+      .boundary()
     val contributorShards = shardsOf(
       descPairs.select(shardOf(col("desc"), shards).as(Shard)))
     val own = refreshed(spark, db, "s_counts")
@@ -343,13 +344,13 @@ object IncrementalBelief {
       .groupBy(col("anc").as("mk_hash"), col("src"))
       .agg(sum("cnt").as("cnt"))
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val mergedAgg =
       (if (!exists(spark, db, "s_agg")) freshAgg
        else refreshed(spark, db, "s_agg")
          .filter(inShards(col(Shard), affectedShards))
          .join(affected.select("mk_hash"), Seq("mk_hash"), "left_anti")
-         .unionByName(freshAgg)).localCheckpoint(true)
+         .unionByName(freshAgg)).boundary(eager = true)
     ShardedStore.overwriteShards(spark, db, "s_agg", mergedAgg, Shard)
 
     // refreshed belief for the affected hashes (pure function of s_agg)

@@ -2,6 +2,7 @@ package graft.assembly
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Persisted ontology-signature index — the delta-shaped form of
   * [[Refinement.ontologyRefinementEdges]]. The batch build joins every
@@ -78,14 +79,14 @@ object IncrementalOntologyEdges {
     val closure = ontologyClosure.getOrElse(
       Refinement.transitiveClosure(ontology.select(col("desc"), col("anc"))))
     val sigs = Refinement.signaturesWithClosure(stmts, agents, closure)
-      .localCheckpoint(false)
+      .boundary()
     val act = sigs.select(col("mk_hash"), col("stype"), col("sig"))
       .withColumn(Shard, sigShard(col("stype"), col("sig"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val gen = sigs.select(col("mk_hash"), col("stype"),
         explode(array_remove(col("gensigs"), col("sig"))).as("gsig"))
       .withColumn(Shard, sigShard(col("stype"), col("gsig"), shards))
-      .localCheckpoint(false)
+      .boundary()
 
     // guards: a hash's rows live at the shards its own signatures map to,
     // which the batch recomputes — presence checks read just those shards
@@ -174,7 +175,7 @@ object IncrementalOntologyEdges {
         .join(descs, closure("anc") === descs("node"), "left_semi")
         .select(col("desc").as("key")))
       .distinct()
-      .localCheckpoint(false)
+      .boundary()
     // one filter-scan of the slim key table finds the affected hashes;
     // their full positional rows then read shard-pruned
     val oKeys = refreshed(spark, db, "o_keys")
@@ -184,26 +185,26 @@ object IncrementalOntologyEdges {
         "left_semi")
       .select("mk_hash").distinct()
       .withColumn(Shard, pmod(col("mk_hash"), lit(shards)).cast("int"))
-      .localCheckpoint(false)
+      .boundary()
     if (affHashes.isEmpty) return none
     val rows = oKeys.filter(inShards(col(Shard), shardsOf(affHashes)))
       .join(affHashes.select("mk_hash"), Seq("mk_hash"), "left_semi")
-      .localCheckpoint(false)
+      .boundary()
     val sigs = Refinement.signatures(
       rows.select("mk_hash", "stype").distinct(),
       rows.select("mk_hash", "ag_num", "db_name", "db_id"),
-      ontology).localCheckpoint(false)
+      ontology).boundary()
     val gen = sigs.select(col("mk_hash"), col("stype"),
         explode(array_remove(col("gensigs"), col("sig"))).as("gsig"))
       .withColumn(Shard, sigShard(col("stype"), col("gsig"), shards))
-      .localCheckpoint(false)
+      .boundary()
     val newGen = (if (!exists(spark, db, "o_gensigs")) gen
       else gen.join(
         refreshed(spark, db, "o_gensigs")
           .filter(inShards(col(Shard), shardsOf(gen)))
           .select("mk_hash", "stype", "gsig"),
         Seq("mk_hash", "stype", "gsig"), "left_anti"))
-      .localCheckpoint(false) // materialize before appending to its source
+      .boundary() // materialize before appending to its source
     ShardedStore.append(spark, db, "o_gensigs", newGen, Seq(Shard))
     // edges from the affected statements' (re)computed gensigs — the
     // superset of what newGen alone would expose, so a replayed delta

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.TypeRegistry
 import graft.querydsl.ReadonlyTables
+import graft.core.BlockScope.Boundary
 
 /** Incremental maintenance of the readonly serving layer — the missing
   * half of the reference's supplement semantics: `preassemble_db.py`
@@ -42,7 +43,7 @@ import graft.querydsl.ReadonlyTables
   * at-least-once replay after a crash between any two writes fills in
   * exactly what is missing and re-derives a consistent readonly state.
   *
-  * The merged shard frames are localCheckpoint'ed before the overwrite
+  * The merged shard frames pass an eager boundary before the overwrite
   * (Spark refuses to overwrite a table its own plan is reading); they are
   * touched-shard-sized, not corpus-sized. A cluster deployment would
   * stage them to a scratch path instead of executor memory.
@@ -109,17 +110,17 @@ object IncrementalReadonly {
     // --- principal appends, each guarded by its own table ----------------
     val dStmts = guarded(
       delta.statements.withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
-      "p_statements", Seq("mk_hash")).localCheckpoint(false)
+      "p_statements", Seq("mk_hash")).boundary()
     val dEv = guarded(
       delta.evidence.withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
-      "p_evidence", Seq("sid")).localCheckpoint(false)
+      "p_evidence", Seq("sid")).boundary()
     val dMesh = guarded(
       delta.mesh.join(delta.evidence.select("sid", "mk_hash"), "sid")
         .withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
-      "p_mesh", Seq("sid", "mesh_num", "is_concept")).localCheckpoint(false)
+      "p_mesh", Seq("sid", "mesh_num", "is_concept")).boundary()
     val dRefs = guarded(
       delta.refs.withColumn(ShardCol, shardOf(col("rid"), shards)),
-      "p_refs", Seq("rid")).localCheckpoint(false)
+      "p_refs", Seq("rid")).boundary()
     append(spark, db, "p_statements", dStmts, Seq(ShardCol))
     append(spark, db, "p_evidence", dEv, Seq(ShardCol))
     append(spark, db, "p_mesh", dMesh, Seq(ShardCol))
@@ -132,7 +133,7 @@ object IncrementalReadonly {
       append(spark, db, "p_agents",
         guarded(delta.agents.withColumn("batch_id", lit(batchId))
           .withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
-          "p_agents", Seq("mk_hash")).localCheckpoint(false),
+          "p_agents", Seq("mk_hash")).boundary(),
         Seq("batch_id", ShardCol))
     else {
       val agentsSeen = exists(spark, db, "p_agents") &&
@@ -153,7 +154,7 @@ object IncrementalReadonly {
       val upd = updRaw
         .select(col("mk_hash"), col("belief").cast("double").as("new_belief"))
         .withColumn(ShardCol, shardOf(col("mk_hash"), shards))
-        .localCheckpoint(false)
+        .boundary()
       val updShards = upd.select(ShardCol).distinct()
         .collect().map(_.getInt(0)).toSeq
       if (updShards.nonEmpty) {
@@ -162,7 +163,7 @@ object IncrementalReadonly {
           .join(upd.select("mk_hash", "new_belief"), Seq("mk_hash"), "left")
           .withColumn("belief", coalesce(col("new_belief"), col("belief")))
           .drop("new_belief")
-        overwriteShards(spark, db, "p_statements", merged.localCheckpoint(true))
+        overwriteShards(spark, db, "p_statements", merged.boundary(eager = true))
       }
     }
 
@@ -177,7 +178,7 @@ object IncrementalReadonly {
         .getOrElse(delta.statements.select("mk_hash").limit(0)))
       .distinct()
       .withColumn(ShardCol, shardOf(col("mk_hash"), shards))
-      .localCheckpoint(false)
+      .boundary()
     if (touched.isEmpty) return
     val touchedShards = touched.select(ShardCol).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -210,7 +211,7 @@ object IncrementalReadonly {
           .filter(col(ShardCol).isin(touchedShards: _*))
           .join(touched.select("mk_hash"), Seq("mk_hash"), "left_anti")
           .unionByName(fresh)
-      overwriteShards(spark, db, name, merged.localCheckpoint(true))
+      overwriteShards(spark, db, name, merged.boundary(eager = true))
     }
   }
 

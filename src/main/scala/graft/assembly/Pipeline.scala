@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.TypeRegistry
 import graft.querydsl.ReadonlyTables
+import graft.core.BlockScope.Boundary
 
 /** The end-to-end assembly DAG — the reference's batch lifecycle (SURVEY
   * §3.3: dump -> distill -> preassemble -> refine -> belief -> readonly
@@ -77,7 +78,7 @@ object Pipeline {
     // boundary stops each from re-running the keyset agg + explode + df
     // join chain
     val marked = exploded.join(dfs, Seq("stype", "block_key"))
-      .localCheckpoint(false)
+      .boundary()
 
     val cold = marked.filter(col("block_df") <= hotKeyThreshold).drop("block_df")
     // secondary blocks: every sorted pair of a statement's hot keys
@@ -127,9 +128,9 @@ object Pipeline {
         // downstream stages consume parsed/unique/agents subtrees many
         // times each, and re-inlining the (wide-schema) parse per consumer
         // makes analysis memory quadratic in pipeline depth. The lazy
-        // local checkpoint replaces the logical plan with an RDD scan
-        // immediately and materializes on first use.
-        df.localCheckpoint(false)
+        // boundary replaces the logical plan with an RDD scan immediately
+        // and materializes on first use.
+        df.boundary()
     }
 
   /** Run the full DAG; returns the queryable readonly layer. */

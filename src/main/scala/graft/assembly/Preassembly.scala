@@ -219,8 +219,9 @@ object Preassembly {
     * unique-statement table (min raw id as the kept payload pointer,
     * matches_key functional in the hash, total evidence count). Prefer this
     * over dedup-then-join when the full parsed payload isn't needed — the
-    * parse subtree evaluates once instead of twice. */
-  /** matches_key rides in the GROUP KEY, not a min() buffer: mk_hash is
+    * parse subtree evaluates once instead of twice.
+    *
+    * matches_key rides in the GROUP KEY, not a min() buffer: mk_hash is
     * stable_hash64(matches_key), so the two group-by forms are identical
     * (the key is functionally determined by its hash — the reference's own
     * matches-hash identity). A min(string) aggregation buffer is not
@@ -228,7 +229,14 @@ object Preassembly {
     * pair — every parsed row sorted per map partition and again after the
     * exchange; with the string in the key the plan is a HashAggregate
     * pair whose partial stage reduces |raw rows| to |distinct hashes|
-    * before the shuffle (guide §2.3). */
+    * before the shuffle (guide §2.3).
+    *
+    * Collision behaviour: if two distinct matches_key values ever share a
+    * 64-bit mk_hash, this emits TWO rows with that mk_hash (one per key),
+    * where a min(matches_key) aggregation would have emitted one; every
+    * mk_hash-keyed join downstream would then see the hash twice. The
+    * engine treats mk_hash as the statement identity throughout, so such
+    * a collision is outside its model, not handled here. */
   def uniqueStatements(parsed: DataFrame): DataFrame =
     parsed.groupBy("mk_hash", "matches_key").agg(
       min("raw_stmt_id").as("raw_stmt_id"),

@@ -2,6 +2,7 @@ package graft.assembly
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Refinement graph operators.
   *
@@ -106,7 +107,7 @@ object Refinement {
       uniq: DataFrame, agents: DataFrame, ontology: DataFrame): DataFrame = {
     // both join sides below read the signature table — the boundary stops
     // the (agents + ontology join + combo expansion) chain running twice
-    val sigs = signatures(uniq, agents, ontology).localCheckpoint(false)
+    val sigs = signatures(uniq, agents, ontology).boundary()
     val general = sigs.select(
       col("mk_hash").as("anc"), col("stype"), col("sig"))
     val specific = sigs.select(
@@ -149,12 +150,12 @@ object Refinement {
     * cluster). Returns (node, pr) with pr in rank units (sums to ≤ N). */
   def pageRank(
       edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
+    val e = edges.select(col("src"), col("dst")).boundary()
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
+      .distinct().boundary()
     val outd = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .boundary()
     val baseMicro = math.round((1 - damping) * 1e6)
     var pr = nodes.withColumn("pr", lit(1000000L))
     for (_ <- 1 to iters) {
@@ -168,7 +169,7 @@ object Refinement {
           (lit(baseMicro) +
             round(lit(damping) * coalesce(col("s"), lit(0L))).cast("long"))
             .as("pr"))
-        .localCheckpoint(false)
+        .boundary()
     }
     pr.select(col("node"), (col("pr").cast("double") / 1e6).as("pr"))
   }
@@ -187,7 +188,7 @@ object Refinement {
       .select(least(col("node"), col("peer")).as("u"),
         greatest(col("node"), col("peer")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(false)
+      .boundary()
     val deg = canon.select(col("u").as("n"))
       .unionByName(canon.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -201,7 +202,7 @@ object Refinement {
           .otherwise(struct(col("v").as("src"), col("u").as("dst")))
           .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(false)
+      .boundary()
     oriented.as("e1")
       .join(oriented.as("e2"), col("e1.dst") === col("e2.src"))
       .join(oriented.as("e3"),
@@ -221,9 +222,9 @@ object Refinement {
       edges: DataFrame, sources: DataFrame, maxIter: Int = 30): DataFrame = {
     val sym = edges.select(col("node"), col("peer"))
       .union(edges.select(col("peer").as("node"), col("node").as("peer")))
-      .distinct().localCheckpoint(false)
+      .distinct().boundary()
     var dist = sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(false)
+      .withColumn("dist", lit(0L)).boundary()
     var frontier = dist.select("node")
     var i = 0L
     var done = false
@@ -233,10 +234,10 @@ object Refinement {
         .select(col("peer").as("node")).distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
         .withColumn("dist", lit(i))
-        .localCheckpoint(false)
+        .boundary()
       if (next.isEmpty) done = true
       else {
-        dist = dist.unionByName(next).localCheckpoint(false)
+        dist = dist.unionByName(next).boundary()
         frontier = next.select("node")
       }
     }
@@ -247,7 +248,7 @@ object Refinement {
     val sym = edges.select(col("node"), col("peer"))
       .union(edges.select(col("peer").as("node"), col("node").as("peer")))
       .distinct()
-      .localCheckpoint(true).toDF("node", "peer")
+      .boundary(eager = true).toDF("node", "peer")
     // seed each label with min(self, neighbors) — the first propagation
     // round folded into initialization for the cost of the node-distinct
     // aggregation the init paid anyway. Clique-shaped clusters (the common
@@ -257,7 +258,7 @@ object Refinement {
     // component) is unchanged, so the fixpoint is identical.
     var labels = sym.groupBy("node")
       .agg(least(col("node"), min(col("peer"))).as("component"))
-      .localCheckpoint(true).toDF("node", "component")
+      .boundary(eager = true).toDF("node", "component")
     var i = 0
     while (i < maxIter) {
       val next = sym.as("e")
@@ -266,7 +267,7 @@ object Refinement {
         .union(labels)
         .groupBy("node")
         .agg(min("component").as("component"))
-        .localCheckpoint(true).toDF("node", "component")
+        .boundary(eager = true).toDF("node", "component")
       val changed = next.as("n")
         .join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.component") =!= col("o.component"))
@@ -287,10 +288,10 @@ object Refinement {
     * shuffle — instead of D frontier rounds.
     */
   def transitiveClosure(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (not cache): iterative plans must truncate lineage or
+    // boundary (not cache): iterative plans must truncate lineage or
     // Catalyst re-analyzes an exponentially growing logical plan each round.
     def fresh(df: DataFrame): DataFrame =
-      df.localCheckpoint(true).toDF("desc", "anc") // new attr ids for self-joins
+      df.boundary(eager = true).toDF("desc", "anc") // new attr ids for self-joins
     var acc = fresh(edges.select(col("desc"), col("anc")).distinct())
     var i = 0
     while (i < maxIter) {

@@ -1,72 +1,104 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle for materialization boundaries (the house fan-out fix: a lazy
-  * `localCheckpoint` on the narrow projection at a DataFrame fan-out point).
+/** The engine's one materialization boundary. Every fan-out point and every
+  * lineage truncation in `src/main/scala` goes through `ds.boundary()`;
+  * nothing else calls `localCheckpoint` or `checkpoint` (PlanSpec scans the
+  * sources for stray calls).
   *
-  * Round-12 verdict item 4: the boundaries themselves are right, but
-  * (a) nothing ever unpersisted them — in a long-lived serving process
-  * (HttpApi) every request leaked one checkpointed selection until the JVM
-  * died, and (b) `localCheckpoint` stores corpus-sized relations on
-  * executor-local storage with TRUNCATED lineage, so at cluster scale one
-  * lost executor fails the job with no recompute path.
+  * {{{
+  * import graft.core.BlockScope.Boundary
+  * val marked = exploded.join(dfs, keys).boundary()        // lazy
+  * val closure = step(df).boundary(eager = true).toDF(...)  // eager
+  * }}}
   *
-  * Fixes, both here:
-  *   - [[boundary]] registers the checkpoint's underlying RDD with the
-  *     enclosing [[scoped]] region (thread-local, so concurrent requests on
-  *     the service pool never touch each other's blocks); the scope
-  *     unpersists them deterministically once the request's result is
-  *     materialized. Without an enclosing scope the behavior is unchanged
-  *     (bench/batch paths — the bench evicts per-run litter itself, and
-  *     the ContextCleaner reclaims GC'd frames).
-  *   - `spark.graft.checkpoint.reliable=true` switches [[boundary]] to a
-  *     RELIABLE `checkpoint()` (files under `spark.graft.checkpoint.dir`,
-  *     or the context's checkpoint dir), the documented escape hatch for
-  *     corpus-sized boundaries where executor loss must not fail the job.
-  *     Default stays the cheap local form: same plan shape either way
-  *     (a LogicalRDD scan at the boundary).
+  * Contracts:
+  *   - **Default (local).** `boundary(eager)` is exactly
+  *     `localCheckpoint(eager)`: the plan is cut at a LogicalRDD scan and
+  *     the rows live in executor block storage with truncated lineage.
+  *   - **Scope.** Inside [[scoped]] (thread-local, so concurrent requests
+  *     on the service pool never touch each other's blocks) every boundary
+  *     created on the thread is registered, and closing the scope
+  *     unpersists it — and, in reliable mode, deletes its checkpoint
+  *     files. The scope's body must materialize what it returns before the
+  *     scope closes; serving handlers do. Outside a scope nothing is
+  *     tracked: the ContextCleaner reclaims GC'd frames (and, under
+  *     GraftSession, their reliable checkpoint files).
+  *   - **Reliable mode.** `spark.graft.checkpoint.reliable=true` switches
+  *     every boundary to a reliable `checkpoint` under
+  *     `spark.graft.checkpoint.dir` (a temp dir when unset), so executor
+  *     loss recomputes from files instead of failing the job. The
+  *     directory is set once per SparkContext, under a lock. A lazy
+  *     reliable boundary is persisted too, so the job that writes its
+  *     files reads the blocks its first use stored instead of computing
+  *     the subtree a second time. Results never depend on the mode.
+  *   - **Inlined.** Inside [[inlined]] (thread-local) `boundary` returns its
+  *     input unchanged, so a plan audit sees the one composed plan the
+  *     production segments add up to.
   */
 object BlockScope {
 
   val RELIABLE_CONF = "spark.graft.checkpoint.reliable"
   val DIR_CONF = "spark.graft.checkpoint.dir"
 
-  private val active = new ThreadLocal[java.util.ArrayList[RDD[_]]]
+  implicit class Boundary[T](private val ds: Dataset[T]) extends AnyVal {
+    /** Materialize `ds` here; see [[BlockScope]] for the contracts. */
+    def boundary(eager: Boolean = false): Dataset[T] =
+      BlockScope.materialize(ds, eager)
+  }
 
-  /** Lazy materialization boundary for a fan-out projection. */
-  def boundary(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.get(RELIABLE_CONF, "false").equalsIgnoreCase("true")
-    val ck =
-      if (!reliable) df.localCheckpoint(false)
-      else {
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(spark.conf.get(DIR_CONF,
-            java.nio.file.Files.createTempDirectory("graft-ck").toString))
-        df.checkpoint(false)
-      }
-    val buf = active.get()
-    if (buf != null && !reliable) checkpointRdd(ck).foreach(buf.add)
+  private val active = new ThreadLocal[java.util.ArrayList[RDD[_]]]
+  private val inline = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+  private val dirLock = new Object
+
+  private def materialize[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
+    if (inline.get) ds
+    else {
+      val spark = ds.sparkSession
+      val reliable =
+        spark.conf.get(RELIABLE_CONF, "false").equalsIgnoreCase("true")
+      val ck =
+        if (!reliable) ds.localCheckpoint(eager)
+        else reliableCheckpoint(spark, ds, eager)
+      val buf = active.get()
+      if (buf != null) checkpointRdd(ck).foreach(buf.add)
+      ck
+    }
+
+  private def reliableCheckpoint[T](
+      spark: SparkSession, ds: Dataset[T], eager: Boolean): Dataset[T] = {
+    val sc = spark.sparkContext
+    dirLock.synchronized {
+      if (sc.getCheckpointDir.isEmpty)
+        sc.setCheckpointDir(spark.conf.getOption(DIR_CONF).getOrElse(
+          java.nio.file.Files.createTempDirectory("graft-ck").toString))
+    }
+    // eager: Spark's write job computes the rows once and later reads come
+    // from the files. Lazy: the files are written by a second job after
+    // the first use, which would re-run the subtree unless it is cached.
+    val ck = ds.checkpoint(eager)
+    if (!eager)
+      checkpointRdd(ck).foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     ck
   }
 
-  /** The persisted RDD behind a checkpointed Dataset (its logical plan is
-    * the LogicalRDD scan the checkpoint produced). */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
-    df.queryExecution.logical match {
+  /** The RDD behind a checkpointed Dataset (its logical plan is the
+    * LogicalRDD scan the checkpoint produced). */
+  private def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
+    ds.queryExecution.logical match {
       case lr: LogicalRDD => Some(lr.rdd)
       case _ => None
     }
 
-  /** Run `f`, then unpersist every boundary created on THIS thread inside
-    * it. `f` must materialize whatever it returns (collect/serialize)
-    * before the scope closes — serving handlers do. Nested scopes release
-    * only their own registrations. */
+  /** Run `f`, then release every boundary created on THIS thread inside it:
+    * unpersist its blocks and delete its reliable checkpoint files. `f`
+    * must materialize whatever it returns (collect/serialize) before the
+    * scope closes. Nested scopes release only their own registrations. */
   def scoped[T](f: => T): T = {
     val prev = active.get()
     val buf = new java.util.ArrayList[RDD[_]]
@@ -75,9 +107,25 @@ object BlockScope {
     finally {
       active.set(prev)
       buf.forEach { rdd =>
-        try rdd.unpersist(blocking = false)
-        catch { case scala.util.control.NonFatal(_) => () }
+        try {
+          rdd.unpersist(blocking = false)
+          // set only once a reliable checkpoint has been written
+          rdd.getCheckpointFile.foreach { f =>
+            val p = new Path(f)
+            p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+          }
+        } catch { case scala.util.control.NonFatal(_) => () }
       }
     }
+  }
+
+  /** Run `f` with every boundary on THIS thread returning its input
+    * unchanged — the test seam for plan audits that want one un-truncated
+    * plan. */
+  def inlined[T](f: => T): T = {
+    val prev = inline.get
+    inline.set(true)
+    try f
+    finally inline.set(prev)
   }
 }

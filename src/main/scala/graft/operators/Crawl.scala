@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{crawl, web}
+import graft.core.BlockScope.Boundary
 
 /** Crawl-planning operators: sitemap ingestion and the politeness-
   * budgeted frontier — the loop-closing pieces over the URL, robots,
@@ -317,16 +318,7 @@ object Crawl {
       minMainLen: Int = 200, minCluster: Long = 3,
       n: Int = 5, k: Int = 12, r: Int = 3,
       dedupThreshold: Double = 0.6, contamFrac: Double = 0.5,
-      packBudget: Long = 512L, packShards: Int = 8,
-      materialize: Boolean = true): DataFrame = {
-    // `materialize = false` keeps the whole composition in ONE logical
-    // plan (no lineage truncation) so plan audits can pin the composed
-    // shape; production keeps the boundaries (see `kept` below).
-    // BlockScope.boundary: `kept` is corpus-sized — at cluster scale
-    // spark.graft.checkpoint.reliable switches to a fault-tolerant
-    // checkpoint instead of executor-local blocks with truncated lineage
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) graft.core.BlockScope.boundary(df) else df
+      packBudget: Long = 512L, packShards: Int = 8): DataFrame = {
     val pages = graft.sources.Content.httpPages(chunks, idCol, chunkCol)
       .withColumn("url", web.url_canonical(
         graft.functions.codecs.header_get(col("warc_headers"),
@@ -348,7 +340,7 @@ object Crawl {
       web.html_title(col("text")).as("title"),
       web.html_main_text(col("text")).as("main"))
     val s404 = Curate.soft404Flags(main, idCol, "domain", "title", "main",
-        minMainLen, minCluster, materialize = materialize)
+        minMainLen, minCluster)
       .where(!col("soft404"))
     // `kept` fans out to four consumers (minhash pairs, the two
     // connected-components runs, contamination, the final pack join) and
@@ -365,12 +357,12 @@ object Crawl {
         col("lang_pred") === lang && col("ttr") >= minTtr)
       .select(col(idCol), col("url"), col("main"),
         col("n_tokens").cast("long").as("n_tokens"))
-      .transform(mat)
+      .boundary()
     // pairs feeds dedupCorpus AND leakageSafeSplit (two CC runs, each
     // eagerly materializing its edge set) — checkpoint the tiny pair list
     val pairs = Dedup.minhashNearDups(kept.select(idCol, "main"), idCol,
       "main", n = n, k = k, r = r, threshold = dedupThreshold)
-      .transform(mat)
+      .boundary()
     val deduped = Dedup.dedupCorpus(kept, idCol, pairs)
     // survivors minus benchmark-contaminated, narrowed to the pack
     // columns: consumed by the split input and the pack join
@@ -380,7 +372,7 @@ object Crawl {
         "main", n = n, minFrac = contamFrac).select(col("doc_id").as(idCol)),
       Seq(idCol), "left_anti")
       .select(col(idCol), col("url"), col("n_tokens"))
-      .transform(mat)
+      .boundary()
     val split = Curate.leakageSafeSplit(clean.select(col(idCol)), idCol,
       pairs)
     Curate.packSequences(

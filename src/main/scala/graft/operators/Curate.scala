@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Corpus-curation operators for large-scale training-data pipelines:
   * benchmark decontamination, PII redaction, repetition-based quality
@@ -81,9 +82,9 @@ object Curate {
     // distinct subtree re-executes per consumer (guide §3.3 — Spark has no
     // automatic common-subtree reuse across DataFrame fan-out)
     val cs = Dedup.shingleHashes(corpus, idCol, textCol, n)
-      .localCheckpoint(false)
+      .boundary()
     val bs = Dedup.shingleHashes(bench, idCol, textCol, n)
-      .select("sh_hash").distinct().localCheckpoint(false)
+      .select("sh_hash").distinct().boundary()
     def posOf(j: Int): Column =
       pmod(col("sh_hash") * (131L * j + 7L) + (97L * j + 3L),
         lit(1000000007L)) % bits
@@ -139,9 +140,9 @@ object Curate {
     // checkpointed per-(doc, feature) counts — without the boundary the
     // corpus explode ran three times (rc, nr, dc) and the target's twice
     val dc = feats(corpus).groupBy("doc_id", "f")
-      .agg(count(lit(1)).as("cnt")).localCheckpoint(false)
+      .agg(count(lit(1)).as("cnt")).boundary()
     val tcd = feats(target).groupBy("f")
-      .agg(count(lit(1)).as("tc")).localCheckpoint(false)
+      .agg(count(lit(1)).as("tc")).boundary()
     val rc = dc.groupBy("f").agg(sum(col("cnt")).as("rc"))
     val nr = dc.groupBy().agg(sum(col("cnt")).as("nr"))
     val nt = tcd.groupBy().agg(sum(col("tc")).as("nt"))
@@ -578,12 +579,7 @@ object Curate {
       stopwords: Seq[String] = Nil,
       minTokens: Long = 30, lang: String = "en", minTtr: Double = 0.2,
       n: Int = 3, k: Int = 12, r: Int = 3,
-      dedupThreshold: Double = 0.6, contamFrac: Double = 0.5,
-      materialize: Boolean = true): DataFrame = {
-    // `materialize = false` keeps one un-truncated logical plan for plan
-    // audits; production keeps the fan-out boundaries (see `kept` below)
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(false) else df
+      dedupThreshold: Double = 0.6, contamFrac: Double = 0.5): DataFrame = {
     val stats = TextAnalysis.qualityStats(docs, textCol, stopwords)
       .withColumn("lang_pred",
         TextAnalysis.langId(col(textCol), stopwords))
@@ -596,11 +592,11 @@ object Curate {
         col("lang_pred") === lang && col("ttr") >= minTtr)
       .select(col(idCol), col(textCol),
         col("n_tokens").cast("long").as("n_tokens"))
-      .transform(mat)
+      .boundary()
     val pairs = Dedup.minhashNearDups(
       kept.select(idCol, textCol), idCol, textCol,
       n = n, k = k, r = r, threshold = dedupThreshold)
-      .transform(mat)
+      .boundary()
     val deduped = Dedup.dedupCorpus(kept, idCol, pairs)
     val clean = deduped.join(
       contaminated(deduped.select(idCol, textCol), bench, idCol, textCol,
@@ -662,18 +658,16 @@ object Curate {
     * boundary- and sampling-invariant. */
   private[operators] def rangedCumsum(
       df: DataFrame, order: Seq[Column], value: Column, out: String,
-      buckets: Int = 64, materialize: Boolean = true): DataFrame = {
+      buckets: Int = 64): DataFrame = {
     // `ranged` feeds BOTH the data-leg window and the bucket-totals
     // aggregation, and exchange reuse is not guaranteed to collapse the
     // two range exchanges — without a boundary the WHOLE input chain
     // (for NB calibration/AUC, an entire scoring DAG) executes once per
     // branch, range-sampling pass included. The lazy checkpoint stores
-    // exactly the post-shuffle rows once. `materialize = false` keeps one
-    // un-truncated plan for the global-order plan audits (which pin the
-    // range exchange); production materializes.
-    val ranged0 = df.repartitionByRange(buckets, order: _*)
+    // exactly the post-shuffle rows once.
+    val ranged = df.repartitionByRange(buckets, order: _*)
       .withColumn("_bucket", spark_partition_id())
-    val ranged = if (materialize) ranged0.localCheckpoint(false) else ranged0
+      .boundary()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("_bucket").orderBy(order: _*)
     val local = ranged.withColumn("_lcum", sum(value).over(w))
@@ -709,8 +703,7 @@ object Curate {
     * single-partition window.
     *
     * Returns the input columns plus (shuffle_key, pos), pos 1-based. */
-  def seededShuffle(df: DataFrame, idCol: String, seed: String,
-      materialize: Boolean = true): DataFrame = {
+  def seededShuffle(df: DataFrame, idCol: String, seed: String): DataFrame = {
     // mix32 after the polynomial hash is load-bearing: the rolling hash is
     // AFFINE in a changed seed prefix (a near-constant additive shift mod
     // p), so without the finalizer two seeds yield nearly the SAME order —
@@ -718,8 +711,7 @@ object Curate {
     val key = TextAnalysis.mix32(TextAnalysis.rollingHash(
       concat(lit(seed), lit("-"), col(idCol).cast("string"))))
     rangedCumsum(df.withColumn("shuffle_key", key),
-      Seq(col("shuffle_key").asc, col(idCol).asc), lit(1L), "pos",
-      materialize = materialize)
+      Seq(col("shuffle_key").asc, col(idCol).asc), lit(1L), "pos")
   }
 
   /** Weighted sampling WITHOUT replacement — k rows with inclusion
@@ -764,7 +756,7 @@ object Curate {
       s"bad percents: head=$headPct mid=$midPct")
     // three consumers (count + the cumsum's two legs) — checkpoint so the
     // scoring DAG feeding this (e.g. a bigram-LM pass) runs once
-    val d = df.localCheckpoint(false)
+    val d = df.boundary()
     val n = d.agg(count(lit(1)).as("_n"))
     rangedCumsum(d, Seq(col(scoreCol).desc, col(idCol).asc),
         lit(1L), "ppl_rank")
@@ -830,12 +822,11 @@ object Curate {
     * Returns (idCol, tokensCol, scoreCol, cum_tokens, selected). */
   def tokenBudgetSelect(
       df: DataFrame, idCol: String, tokensCol: String, scoreCol: String,
-      budget: Long, materialize: Boolean = true): DataFrame = {
+      budget: Long): DataFrame = {
     rangedCumsum(
       df.select(col(idCol), col(tokensCol).cast("long").as(tokensCol),
         col(scoreCol)),
-      Seq(col(scoreCol).desc, col(idCol).asc), col(tokensCol), "cum_tokens",
-      materialize = materialize)
+      Seq(col(scoreCol).desc, col(idCol).asc), col(tokensCol), "cum_tokens")
       .withColumn("selected",
         col("cum_tokens") - col(tokensCol) < budget)
   }
@@ -883,16 +874,13 @@ object Curate {
   def soft404Flags(
       df: DataFrame, idCol: String, domainCol: String, titleCol: String,
       textCol: String, minMainLen: Int = 200,
-      minCluster: Long = 3, materialize: Boolean = true): DataFrame = {
+      minCluster: Long = 3): DataFrame = {
     // the input feeds the fingerprint pass AND the flag join, and the
     // fingerprinted rows feed the cluster count AND the final join —
     // without boundaries the caller's upstream (in the crawl pipeline:
     // the whole WARC/HTTP ingest + main-content chain) re-executes per
-    // consumer (guide §3.3). `materialize = false` keeps one un-truncated
-    // plan for plan audits.
-    def mat(d: DataFrame): DataFrame =
-      if (materialize) d.localCheckpoint(false) else d
-    val dfm = mat(df)
+    // consumer (guide §3.3).
+    val dfm = df.boundary()
     // null text tokenizes as "" (one empty token), so a failed
     // dechunk/decompress layer — exactly the prime soft-404 candidate —
     // still gets a fingerprint row: every input row must come back with
@@ -900,8 +888,8 @@ object Curate {
     // decode-failed pages on one host ARE a template signal)
     val toks = dfm.select(col(idCol).as("doc_id"),
       explode(TextAnalysis.tokens(coalesce(col(textCol), lit("")))).as("tok"))
-    val sh = mat(Dedup.simhash(toks)
-      .withColumnRenamed("doc_id", idCol))
+    val sh = Dedup.simhash(toks)
+      .withColumnRenamed("doc_id", idCol).boundary()
     // left joins as the second line of defense: a doc the fingerprint
     // pass somehow missed still surfaces, with template_dup = false
     val keyed = dfm.join(sh, Seq(idCol), "left")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB regime:
@@ -91,7 +92,7 @@ object Dedup {
     *
     * Plan-transparent (no materialization): the input is read twice (hot-key
     * aggregation + anti-join), so callers whose input is an expensive
-    * pipeline should pass a localCheckpoint'ed frame — see
+    * pipeline should pass a frame cut at a boundary — see
     * [[ngramJaccardPairs]] / [[deltaNearDups]]. */
   def capBucketDf(keyed: DataFrame, bucketCols: Seq[String], maxDf: Long): DataFrame =
     keyed.join(broadcast(hotBuckets(keyed, bucketCols, maxDf)),
@@ -124,7 +125,7 @@ object Dedup {
   def lshCandidates(minhashes: DataFrame, r: Int, maxBucket: Long = 1000): DataFrame = {
     // both self-join sides read the capped signatures: materialize once
     val sigs = capBucketDf(bandSignatures(minhashes, r),
-      Seq("band", "sig"), maxBucket).localCheckpoint(false)
+      Seq("band", "sig"), maxBucket).boundary()
     sigs.as("x").join(sigs.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -165,10 +166,10 @@ object Dedup {
     // shingle explode + distinct runs ONCE (the string column is dropped
     // first: nothing downstream of hashing needs it)
     val sh = shingleHashes(df, idCol, textCol, n)
-      .localCheckpoint(false)
+      .boundary()
     val hot = hotBuckets(sh, Seq("sh_hash"), maxDf).select("sh_hash")
     val capped = sh.join(broadcast(hot), Seq("sh_hash"), "left_anti")
-      .localCheckpoint(false)
+      .boundary()
     // interCapped feeds the hot patch AND the final join: materialize it
     // so the dominant co-occurrence self-join + aggregation runs once
     val interCapped = capped.as("p").join(capped.as("q"),
@@ -176,7 +177,7 @@ object Dedup {
           col("p.doc_id") < col("q.doc_id"))
       .groupBy(col("p.doc_id").as("a_id"), col("q.doc_id").as("b_id"))
       .agg(count(lit(1)).as("inter_sub"))
-      .localCheckpoint(false)
+      .boundary()
     // docs' hot-shingle memberships: small (hot keys are few by
     // construction), joined only against candidate pairs
     val hotRows = sh.join(broadcast(hot), Seq("sh_hash"), "left_semi")
@@ -203,7 +204,7 @@ object Dedup {
   /** Exact Jaccard over shingle sets for given candidate pairs.
     * |A ∩ B| via co-occurrence join; |A ∪ B| = |A| + |B| - |A ∩ B|.
     * The shingle input feeds THREE join sites (a-side, b-side, sizes):
-    * callers pass a materialized (localCheckpoint'ed or persisted) frame so
+    * callers pass a materialized (boundary or persisted) frame so
     * the text-scan + explode + distinct upstream runs once, not three
     * times — see [[ngramJaccardPairs]] / [[minhashNearDups]]. */
   def jaccard(candidates: DataFrame, shingles: DataFrame): DataFrame = {
@@ -229,7 +230,7 @@ object Dedup {
       n: Int = 3, k: Int = 12, r: Int = 3,
       threshold: Double = 0.6, maxBucket: Long = 1000): DataFrame = {
     val sh = shingleHashes(df, idCol, textCol, n)
-      .localCheckpoint(false)
+      .boundary()
     val cands = lshCandidates(minhash(sh, k), r, maxBucket)
     jaccard(cands, sh)
       .filter(col("jaccard") >= threshold)
@@ -288,9 +289,9 @@ object Dedup {
       aNames: DataFrame, bNames: DataFrame, n: Int, threshold: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     val sa = charShingleSet(aNames, "nm_a", "nm_a", n)
-      .select(col("id").as("a_id"), col("sh_hash")).localCheckpoint(false)
+      .select(col("id").as("a_id"), col("sh_hash")).boundary()
     val sb = charShingleSet(bNames, "nm_b", "nm_b", n)
-      .select(col("id").as("b_id"), col("sh_hash")).localCheckpoint(false)
+      .select(col("id").as("b_id"), col("sh_hash")).boundary()
     val dfTab = sa.select("sh_hash").unionByName(sb.select("sh_hash"))
       .groupBy("sh_hash").agg(count(lit(1)).as("df"))
     def prefix(s: DataFrame, idc: String): DataFrame = {
@@ -314,9 +315,9 @@ object Dedup {
       b: DataFrame, bIdCol: String, bNameCol: String,
       n: Int = 3, threshold: Double = 0.3): DataFrame = {
     val aNames = a.select(col(aNameCol).as("nm_a")).distinct()
-      .localCheckpoint(false)
+      .boundary()
     val bNames = b.groupBy(col(bNameCol).as("nm_b"))
-      .agg(min(col(bIdCol)).as("b_id")).localCheckpoint(false)
+      .agg(min(col(bIdCol)).as("b_id")).boundary()
     val (sa, sb, cands) = namePrefixCandidates(aNames, bNames, n, threshold)
     val inter = cands
       .join(sa, "a_id")
@@ -361,9 +362,9 @@ object Dedup {
       n: Int = 3, blockThreshold: Double = 0.2,
       threshold: Double = 0.7): DataFrame = {
     val aNames = a.select(col(aNameCol).as("nm_a")).distinct()
-      .localCheckpoint(false)
+      .boundary()
     val bNames = b.groupBy(col(bNameCol).as("nm_b"))
-      .agg(min(col(bIdCol)).as("b_id")).localCheckpoint(false)
+      .agg(min(col(bIdCol)).as("b_id")).boundary()
     val (_, _, cands) = namePrefixCandidates(aNames, bNames, n,
       blockThreshold)
     val bRow = bNames.toDF("b_name", "b_row")
@@ -402,7 +403,7 @@ object Dedup {
       n: Int = 3, k: Int = 12, r: Int = 3,
       threshold: Double = 0.8, maxBucket: Long = 1000): DataFrame = {
     val sh = shingleHashes(df, idCol, textCol, n)
-      .localCheckpoint(false)
+      .boundary()
     val cands = lshCandidates(minhash(sh, k), r, maxBucket)
     jaccard(cands, sh)
       .withColumn("containment",
@@ -425,7 +426,7 @@ object Dedup {
       n: Int = 3, k: Int = 12, r: Int = 3): Unit = {
     val spark = df.sparkSession
     val sh = shingleHashes(df, idCol, textCol, n)
-      .localCheckpoint(false)
+      .boundary()
     graft.assembly.Deploy.saveBucketed(
       spark, bandSignatures(minhash(sh, k), r), db, "band_sigs", buckets,
       Seq("band", "sig"))
@@ -469,7 +470,7 @@ object Dedup {
     val spark = sh.sparkSession
     spark.catalog.refreshTable(s"$db.shingles")
     spark.catalog.refreshTable(s"$db.band_sigs")
-    val shBatch = sh.localCheckpoint(false)
+    val shBatch = sh.boundary()
     val freshSigs = shBatch.join(
         spark.table(s"$db.band_sigs").select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
@@ -640,8 +641,8 @@ object Dedup {
     // (doc_id, sh_hash). Downstream joins stay plan-transparent, so the
     // bucket-pruning semi join below remains visible/assertable.
     val newSh = shingleHashes(newDocs, idCol, textCol, n)
-      .localCheckpoint(false)
-    val newSigs = bandSignatures(minhash(newSh, k), r).localCheckpoint(false)
+      .boundary()
+    val newSigs = bandSignatures(minhash(newSh, k), r).boundary()
     // a re-ingested id (present in old AND new) means an updated doc: the
     // new version REPLACES the old rows — without this, union'd shingle
     // sets double-count and Jaccard exceeds 1
@@ -668,7 +669,7 @@ object Dedup {
       .unionByName(cands.select(col("b_id").as("doc_id"))).distinct()
     val candSh = oldShLive.select("doc_id", "sh_hash").unionByName(newSh)
       .join(candIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
+      .boundary()
     jaccard(cands, candSh)
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
@@ -717,14 +718,12 @@ object Dedup {
     // result by both self-join sides — without the boundaries the caller's
     // tokenize + 32-vote fingerprint aggregation re-executes 4× (guide
     // §3.3; lshCandidates already does the same for band signatures).
-    // BlockScope.boundary: these two are CORPUS-sized — at cluster scale
-    // set spark.graft.checkpoint.reliable for a fault-tolerant boundary
-    val sh = graft.core.BlockScope.boundary(simhashes)
+    val sh = simhashes.boundary()
     val bytes = (0 until 4).map(i => (i, 255L << (8 * i))).toDF("byte_idx", "byte_mask")
     val keyed0 = sh.join(broadcast(bytes))
       .withColumn("byte_val", col("simhash").bitwiseAND(col("byte_mask")))
-    val keyed = graft.core.BlockScope.boundary(
-      capBucketDf(keyed0, Seq("byte_idx", "byte_val"), maxBucket))
+    val keyed = capBucketDf(keyed0, Seq("byte_idx", "byte_val"), maxBucket)
+      .boundary()
     keyed.as("x").join(keyed.as("y"),
         col("x.byte_idx") === col("y.byte_idx") &&
           col("x.byte_val") === col("y.byte_val") &&
@@ -793,9 +792,9 @@ object Dedup {
     // regex-tokenize passes over every document (guide §3.3 / the house
     // fan-out boundary). The gram window's shuffle is the operator's
     // honest core and is unchanged.
-    val tokArr = graft.core.BlockScope.boundary(
-      df.select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("toks")))
+    val tokArr = df.select(col(idCol).as("doc_id"),
+        TextAnalysis.tokens(col(textCol)).as("toks"))
+      .boundary()
     val covered = duplicatedSpansFromToks(tokArr, n)
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + n - 1)).as("pos"))
@@ -850,7 +849,7 @@ object Dedup {
         posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
       .withColumn("lh", TextAnalysis.rollingHash(col("line")))
     val batchPairs = lines.select("doc_id", "lh").distinct()
-      .localCheckpoint(false)
+      .boundary()
     val hot = storedLineDocs.select("doc_id", "lh")
       .join(batchPairs.select("lh").distinct(), Seq("lh"), "left_semi")
       .unionByName(batchPairs)
@@ -904,7 +903,7 @@ object Dedup {
     val spark = batch.sparkSession
     spark.catalog.refreshTable(s"$db.line_docs")
     val fresh = docLineHashes(batch, idCol, textCol)
-      .localCheckpoint(false)
+      .boundary()
       .join(spark.table(s"$db.line_docs").select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
     graft.assembly.StoreFaults.onWrite(s"$db.line_docs")
@@ -934,12 +933,11 @@ object Dedup {
     // the exploded line rows feed the document-frequency aggregation AND
     // the anti-join + reassembly: materialized so the split + hash pass
     // runs once (guide §3.3; lineDedupDelta's batchPairs convention).
-    // BlockScope.boundary: corpus-sized (every line of every document) —
-    // spark.graft.checkpoint.reliable makes it fault-tolerant at scale
-    val lines = graft.core.BlockScope.boundary(df
+    val lines = df
       .select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-      .withColumn("lh", TextAnalysis.rollingHash(col("line"))))
+      .withColumn("lh", TextAnalysis.rollingHash(col("line")))
+      .boundary()
     val hot = lines
       .groupBy("lh").agg(countDistinct(col("doc_id")).as("line_df"))
       .filter(col("line_df") >= minDf)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.images
+import graft.core.BlockScope.Boundary
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque binary
   * columns with typed metadata, processed per-partition in batches.
@@ -129,7 +130,7 @@ object Multimodal {
       col(idCol).as("id"),
       dhash(col(dataCol), col(wCol), col(hCol)).as("sig"))
       .where(col("sig").isNotNull)
-      .localCheckpoint(false)
+      .boundary()
     hammingBandPairs(sigs, maxHamming, "dhash", maxPerBucket)
   }
 
@@ -162,7 +163,7 @@ object Multimodal {
     // twice more — without the checkpoint the decode lineage would rerun
     val capped = Dedup.capBucketDf(
         banded, Seq("band_idx", "band_val"), maxPerBucket)
-      .localCheckpoint(false)
+      .boundary()
     val a = capped.select(col("id").as("id_a"), col("sig").as(sa),
       col("band_idx"), col("band_val"))
     val b = capped.select(col("id").as("id_b"), col("sig").as(sb),
@@ -207,7 +208,7 @@ object Multimodal {
     val sigs = media.select(col(idCol).as("id"),
         images.audio_fingerprint(col(dataCol)).as("sig"))
       .where(col("sig").isNotNull)
-      .localCheckpoint(false)
+      .boundary()
     hammingBandPairs(sigs, maxHamming, "fp", maxPerBucket)
   }
 
@@ -256,7 +257,7 @@ object Multimodal {
       maxPerBucket: Long = 1L << 14): DataFrame =
     deltaDhashNearDupsFromSigs(
       dhashBandSignatures(newMedia, idCol, dataCol, wCol, hCol)
-        .localCheckpoint(false),
+        .boundary(),
       oldSigs, maxHamming, maxPerBucket)
 
   /** [[deltaDhashNearDups]] over PRE-COMPUTED banded signatures of the new
@@ -279,7 +280,7 @@ object Multimodal {
     // checkpoint the index read + union + prune lineage runs 4x
     val capped = Dedup.capBucketDf(
       touched, Seq("band_idx", "band_val"), maxPerBucket)
-      .localCheckpoint(false)
+      .boundary()
     val a = capped.select(col("id").as("id_a"), col("sig").as("dhash_a"),
       col("band_idx"), col("band_val"), col("is_new").as("new_a"))
     val b = capped.select(col("id").as("id_b"), col("sig").as("dhash_b"),
@@ -390,7 +391,7 @@ object Multimodal {
       .distinct()
       // materialized: the cap + self-join below read sigs four times,
       // and each read would otherwise re-hash every frame buffer
-      .localCheckpoint(false)
+      .boundary()
     val capped = Dedup.capBucketDf(sigs, Seq("fh"), maxPerHash)
     val a = capped.select(col("vid").as("id_a"), col("fh"))
     val b = capped.select(col("vid").as("id_b"), col("fh"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -147,7 +148,7 @@ object Similarity {
           e => e.getField("m")).as("cent_emb"))
         .select(col("cell").as("cent_id"), col("cent_emb"),
           sqrt(ddot(col("cent_emb"), col("cent_emb"))).as("cent_nrm"))
-        .localCheckpoint(true) // truncate the per-iteration lineage
+        .boundary(eager = true) // truncate the per-iteration lineage
         .toDF("cent_id", "cent_emb", "cent_nrm")
     }
     cents
@@ -293,7 +294,7 @@ object Similarity {
   def pqKmeansCodebooks(
       vectors: DataFrame, m: Int, dim: Int, ksub: Int, iters: Int,
       scale: Int = 4, meanScale: Int = 6): DataFrame = {
-    val sv = subvectorRows(vectors, m, dim).localCheckpoint(false)
+    val sv = subvectorRows(vectors, m, dim).boundary()
     var cb = pqCodebooks(vectors, m, dim, ksub)
       .select(col("sub"), col("cent_id"),
         col("cent").cast("array<double>").as("cent"))
@@ -317,7 +318,7 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("mv")))),
           e => e.getField("mv")).as("cent"))
-        .localCheckpoint(true) // truncate per-iteration lineage
+        .boundary(eager = true) // truncate per-iteration lineage
         .toDF("sub", "cent_id", "cent")
     }
     cb
@@ -421,7 +422,7 @@ object Similarity {
       .select(col("q_id"), col("cent_id").as("cell"),
         zip_with(col("q_emb"), col("cent_emb"),
           (x, y) => x.cast("double") - y.cast("double")).as("q_res"))
-      .localCheckpoint(false)
+      .boundary()
     val qdist = probed
       .select(col("q_id"), col("cell"),
         posexplode(transform(sequence(lit(0), lit(m - 1)),
@@ -455,8 +456,8 @@ object Similarity {
       vectors: DataFrame, db: String, buckets: Int,
       nCells: Int, m: Int, dim: Int, ksub: Int): Unit = {
     val spark = vectors.sparkSession
-    val index = ivfIndex(vectors, nCells).localCheckpoint(false)
-    val cb = pqCodebooks(vectors, m, dim, ksub).localCheckpoint(false)
+    val index = ivfIndex(vectors, nCells).boundary()
+    val cb = pqCodebooks(vectors, m, dim, ksub).boundary()
     graft.assembly.Deploy.saveBucketed(
       spark, index, db, "cells", buckets, Seq("cell"))
     // encode from the assigned index, not the raw vectors: the codes then
@@ -745,7 +746,7 @@ object Similarity {
   def writeSqIndex(
       vectors: DataFrame, db: String, buckets: Int, dim: Int): Unit = {
     val spark = vectors.sparkSession
-    val stats = sqStats(vectors, dim).localCheckpoint(false)
+    val stats = sqStats(vectors, dim).boundary()
     graft.assembly.Deploy.saveBucketed(
       spark, sqEncode(vectors, stats, dim), db, "sq_codes", buckets,
       Seq("id"))

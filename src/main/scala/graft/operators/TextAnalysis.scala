@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.BlockScope.Boundary
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality stats, language-ID heuristic, and content
@@ -161,7 +162,7 @@ object TextAnalysis {
     // c2(w1, w2) exactly — so the corpus tokenize + explode runs once
     // instead of once per model table (guide §3.3)
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .localCheckpoint(false)
+      .boundary()
     (c2, c2.groupBy("w1").agg(sum(col("c2")).as("c1")))
   }
 
@@ -235,10 +236,10 @@ object TextAnalysis {
     val terms = docs
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
     val tf = terms.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .boundary()
     val dl = docs.select(
       col(idCol), size(tokens(col(textCol))).cast("long").as("dl"))
-      .localCheckpoint(false)
+      .boundary()
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = dl.agg(
       count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
@@ -495,7 +496,7 @@ object TextAnalysis {
           .groupBy("word").agg(count(lit(1)).as("wc"))
           .select(bpeEncodeChars(col("word")).as("enc"), col("wc"))
       else df.select(bpeEncode(col(textCol)).as("enc"), lit(1L).as("wc"))
-    var enc = enc0.localCheckpoint(false)
+    var enc = enc0.boundary()
     val out = scala.collection.mutable.ListBuffer.empty[(Int, Int, String, String, Long)]
     var round = 1
     var exhausted = false
@@ -532,7 +533,7 @@ object TextAnalysis {
             lit(US + l + RS + r + US))
         }
         enc = enc.select(rewritten.as("enc"), col("wc"))
-          .localCheckpoint(false)
+          .boundary()
         round += 1
       }
     }
@@ -593,7 +594,7 @@ object TextAnalysis {
     val spark = encWeighted.sparkSession
     import spark.implicits._
     val (_, merges) =
-      bpeMergeSegment(encWeighted.localCheckpoint(false), iterations, 1)
+      bpeMergeSegment(encWeighted.boundary(), iterations, 1)
     merges.toDF("it", "pair_l", "pair_r", "cnt")
   }
 
@@ -634,7 +635,7 @@ object TextAnalysis {
         enc = enc.select(replace(col("enc"),
             lit(US + l + US + US + r + US),
             lit(US + l + RS + r + US)).as("enc"), col("wc"))
-          .localCheckpoint(false) // truncate the per-round lineage
+          .boundary() // truncate the per-round lineage
         it += 1
       }
     }
@@ -646,7 +647,7 @@ object TextAnalysis {
     * segments of `segmentSize` merges, and between segments the only
     * state that exists is the rewritten word dictionary (BPE is Markov
     * in the rewritten corpus: pair counts are a pure function of it),
-    * already lineage-free via per-round localCheckpoint. Chaining is
+    * already lineage-free via a per-round boundary. Chaining is
     * therefore EXACT — a 32k-vocab train is this driver loop, and its
     * merge table is identical to a hypothetical single unbounded run
     * (RetrievalSpec pins the law). Stops early when pairs exhaust.
@@ -664,7 +665,7 @@ object TextAnalysis {
     var enc = df.select(explode(tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wc"))
       .select(bpeEncodeChars(col("word"), markEnd).as("enc"), col("wc"))
-      .localCheckpoint(false)
+      .boundary()
     val all = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var done = 0
     var exhausted = false
@@ -847,13 +848,13 @@ object TextAnalysis {
       explode(tokens(lower(col(textCol)))).as("term"))
     val tokenCounts =
       terms.groupBy("label", "term").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .boundary()
     val classStats = labeled
       .groupBy(col(labelCol).as("label"))
       .agg(count(lit(1)).as("n_docs"))
       .join(tokenCounts.groupBy("label").agg(sum(col("c")).as("tot")),
         "label")
-      .localCheckpoint(false)
+      .boundary()
     (tokenCounts, classStats)
   }
 
@@ -968,20 +969,17 @@ object TextAnalysis {
     * scores — [[nbClassScores]]'s output — keep ties engine-exact).
     *
     * Returns one row: (n_pos, n_neg, u2, auc) with auc = u2/(2*np*nn). */
-  def rocAuc(scored: DataFrame, scoreCol: String, posCol: String,
-      materialize: Boolean = true): DataFrame = {
+  def rocAuc(scored: DataFrame, scoreCol: String, posCol: String): DataFrame = {
     // checkpoint the histogram (<= #distinct scores rows): the cumsum
     // below fans out to two consumers, and without a boundary each would
     // re-execute the whole scoring DAG that produced `scored`.
-    // `materialize = false` keeps one un-truncated plan for plan audits.
-    val hist0 = scored
+    val hist = scored
       .groupBy(col(scoreCol).as("s"))
       .agg(
         sum(when(col(posCol), 1L).otherwise(0L)).as("np"),
         sum(when(col(posCol), 0L).otherwise(1L)).as("nn"))
-    val hist = if (materialize) hist0.localCheckpoint(false) else hist0
-    Curate.rangedCumsum(hist, Seq(col("s").asc), col("nn"), "_cum_nn",
-        materialize = materialize)
+      .boundary()
+    Curate.rangedCumsum(hist, Seq(col("s").asc), col("nn"), "_cum_nn")
       .withColumn("cum_nn", col("_cum_nn") - col("nn"))
       .agg(
         sum(col("np")).as("n_pos"),
@@ -1012,7 +1010,7 @@ object TextAnalysis {
     // the scored relation feeds both the total-count scalar and the rank
     // cumsum; checkpoint the (narrow) rows so the scoring DAG that
     // produced them runs once, not once per consumer
-    val s = scored.localCheckpoint(false)
+    val s = scored.boundary()
     val n = s.agg(count(lit(1)).as("_n"))
     Curate.rangedCumsum(
         s, Seq(col(scoreCol).asc, col(idCol).asc), lit(1L), "_rank")
@@ -1050,7 +1048,7 @@ object TextAnalysis {
     // tf feeds the df aggregation AND the scoring join: materialized so
     // the tokenize + (doc, term) count runs once (guide §3.3)
     val tf = terms.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .boundary()
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // corpus size as a broadcast one-row join, not an eager count: the
     // whole operator stays one Catalyst plan (no driver-side scan). Stays

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.assembly.{Belief, Distill, Preassembly, Refinement}
 import graft.sources.Tables
+import graft.core.BlockScope.Boundary
 
 /** Assembly-pipeline operators through the gate: reading distillation
   * (two-window priority), preassembly (statement JSON parse -> canonical
@@ -190,7 +191,7 @@ object AssemblyQueries extends QueryPack {
         val ev = Tables.parallelized(Tables.events(s, dir))
           .select(col("event_id"), col("event_type"), col("value"),
             k0.as("_k"))
-          .localCheckpoint(false)
+          .boundary()
         val k = col("_k")
         val readings = ev.select(
           col("event_id").as("rid"),
@@ -467,14 +468,14 @@ object AssemblyQueries extends QueryPack {
               map(lit("HGNC"),
                 concat(lit("S"), (col("l_suppkey") % 20).cast("string")))
                 .as("db_refs")).as("obj"))).as("raw_json"))
-          .localCheckpoint(false)
+          .boundary()
         // the old run's parse feeds BOTH links (the anti-join side) and
         // its source counts; without a materialization boundary the whole
         // window + to_json + from_json + matches-key subtree evaluates
         // once per consumer. Checkpoint only the three columns both
         // consumers need — kilobytes per 100k rows, not the parsed structs
         val oldKeyed = Preassembly.parse(raw.filter(!col("is_new")))
-          .select("raw_stmt_id", "mk_hash", "src").localCheckpoint(false)
+          .select("raw_stmt_id", "mk_hash", "src").boundary()
         val delta = graft.streaming.Streams.newRawStatements(
           raw, oldKeyed.select("raw_stmt_id", "mk_hash"))
         val merged = graft.streaming.Streams.mergeSourceCounts(
@@ -531,7 +532,7 @@ object AssemblyQueries extends QueryPack {
         // parse once: valid and rejected are two filters over the same
         // rows, and without the boundary the union re-runs the whole
         // parse (incl. the strict suspect checks) per branch
-        val parsed = Preassembly.parse(raw).localCheckpoint(false)
+        val parsed = Preassembly.parse(raw).boundary()
         val (valid, rejected) = Preassembly.partitionValid(parsed)
         valid.select(col("category"), lit(1L).as("ok"), col("matches_key"))
           .unionByName(rejected.select(col("category"), lit(0L).as("ok"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Curate, Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
+import graft.core.BlockScope.Boundary
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables, each with a relational DuckDB oracle. Near-dup demos derive a
@@ -665,9 +666,9 @@ comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY 1)"""
         // the old corpus' index/shingles are PERSISTED artifacts in the
         // incremental scenario — materialize once, as a parquet read would
         val oldSh = Dedup.shingleHashes(old, "doc_id", "text", 3)
-          .localCheckpoint(false)
+          .boundary()
         val oldSigs = Dedup.bandSignatures(Dedup.minhash(oldSh, 12), 3)
-          .localCheckpoint(false)
+          .boundary()
         Dedup.deltaNearDups(newBatch, "doc_id", "text", oldSigs, oldSh,
           n = 3, k = 12, r = 3, threshold = 0.6)
       },
@@ -849,7 +850,7 @@ comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY 1)"""
         val c = corpusLines(s, dir)
         val stored = Dedup.docLineHashes(
           c.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-          .localCheckpoint(false) // persisted-artifact stand-in
+          .boundary() // persisted-artifact stand-in
         Dedup.lineDedupDelta(c.filter(col("doc_id") % 2 === 1),
           "doc_id", "text", stored, minDf = 30L)
       },

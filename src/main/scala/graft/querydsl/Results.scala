@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.TypeRegistry
+import graft.core.BlockScope.Boundary
 
 /** Result envelopes over a compiled hash query — the Spark analog of the
   * reference's StatementQueryResult / QueryResult family
@@ -140,12 +141,8 @@ object Results {
     // pre-filters the payload dedup and the agent-array aggregation,
     // which otherwise dedup/aggregate the ENTIRE link and agent tables
     // before meeting a handful of selected hashes (guide §3.2 — drop
-    // non-matching big-side rows before the exchange). boundary():
-    // registered with the serving request's BlockScope so the blocks are
-    // unpersisted when the request completes (round-12 verdict item 4 —
-    // a long-lived HttpApi leaked one checkpointed selection per request)
-    val sel = graft.core.BlockScope.boundary(
-      QueryCompiler.compile(q, ro, types).select("mk_hash"))
+    // non-matching big-side rows before the exchange).
+    val sel = QueryCompiler.compile(q, ro, types).select("mk_hash").boundary()
     val ev = statementsFromSel(sel, ro, evLimit, evFilter, withRefs = true)
     val collected = ev.groupBy("mk_hash").agg(
       array_sort(collect_list(struct(
@@ -352,20 +349,18 @@ object Results {
     // rows feeds the group agg AND the complex-coverage join, and groups
     // feeds three consumers — materialize each once (lazily) instead of
     // re-running the compile + semi-join + dedup shuffles per consumer.
-    // boundary(): serving requests unpersist these when they complete
-    // (BlockScope); outside a scope the ContextCleaner reclaims GC'd
-    // frames as before, and MEMORY_AND_DISK evicts under pressure
-    val rows = graft.core.BlockScope.boundary(ro.agentInteractions
+    val rows = ro.agentInteractions
       .join(sel, Seq("mk_hash"), "left_semi")
       .select("mk_hash", "agent_str", "agent_count", "type_num", "ev_count",
         "belief")
-      .dropDuplicates("mk_hash", "agent_str", "agent_count"))
-    val groups = graft.core.BlockScope.boundary(
-      rows.groupBy("agent_str", "agent_count")
-        .agg(sum("ev_count").as("total_ev"), max("belief").as("max_belief"),
-          count(lit(1)).as("n_hashes"),
-          max(when(col("type_num") =!= complexTypeNum, 1).otherwise(0))
-            .as("has_other")))
+      .dropDuplicates("mk_hash", "agent_str", "agent_count")
+      .boundary()
+    val groups = rows.groupBy("agent_str", "agent_count")
+      .agg(sum("ev_count").as("total_ev"), max("belief").as("max_belief"),
+        count(lit(1)).as("n_hashes"),
+        max(when(col("type_num") =!= complexTypeNum, 1).otherwise(0))
+          .as("has_other"))
+      .boundary()
     val cjoin = rows.filter(col("type_num") === complexTypeNum)
       .join(groups.select("agent_str", "agent_count", "total_ev"),
         Seq("agent_str", "agent_count"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.BlockScope.Boundary
 
 /** Streaming / incremental operators.
   *
@@ -357,7 +358,7 @@ object Streams {
           .partitionBy("batch_id")
           .parquet(pairsOutDir)
         val batchSh = Dedup.shingleHashes(batch, "doc_id", "text", n)
-          .localCheckpoint(false)
+          .boundary()
         Dedup.appendIndex(batchSh, indexDb, indexBuckets, k, r)
         // in-stream LSM compaction (opt-in): foreachBatch serializes
         // micro-batches, so the rewrite never races a probe of this stream
@@ -536,7 +537,7 @@ object Streams {
               org.apache.spark.sql.types.LongType))))
         // hash each payload exactly ONCE per batch: the materialized
         // signature frame feeds both the pair join and the index append
-        val newSigs = sigsOf(batch).localCheckpoint(false)
+        val newSigs = sigsOf(batch).boundary()
         val oldSigs =
           try {
             val raw = spark.read.parquet(indexDir)
@@ -617,7 +618,7 @@ object Streams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.operators.TextAnalysis
-        val b = batch.localCheckpoint(false)
+        val b = batch.boundary()
         b.groupBy("lang", "source")
           .agg(count(lit(1)).as("n_docs"),
             sum(size(TextAnalysis.tokens(col("text"))).cast("long"))
@@ -696,7 +697,7 @@ object Streams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.operators.Dedup
-        val b = batch.localCheckpoint(false)
+        val b = batch.boundary()
         Dedup.lineDedupDelta(b, "doc_id", "text",
             Dedup.loadLineIndex(spark, indexDb), minDf)
           .withColumn("batch_id", lit(batchId))
@@ -802,15 +803,15 @@ object Streams {
         // too so the upsert's many downstream actions analyze LogicalRDDs,
         // not the full statement-JSON parse expression tree (driver-side
         // Catalyst cost per action — see streamingScoredReadonly)
-        val v = valid.localCheckpoint(false)
+        val v = valid.boundary()
         val statements = v
           .select(col("mk_hash"), col("stmt.type").as("stype")).distinct()
           .withColumn("belief", lit(null).cast("double"))
-          .localCheckpoint(false)
+          .boundary()
         val evidence = v.select(col("raw_stmt_id").as("sid"), col("mk_hash"),
           col("src"), col("raw_stmt_id").as("rid"),
           lit(null).cast("long").as("pmid"))
-        val agents = Preassembly.agentRows(v).localCheckpoint(false)
+        val agents = Preassembly.agentRows(v).boundary()
         val mesh = v.select(col("raw_stmt_id").as("sid"),
           lit(0L).as("mesh_num"), lit(0).cast("int").as("is_concept"))
           .limit(0)
@@ -886,7 +887,7 @@ object Streams {
           Preassembly, StatementWorld}
         val ses = batch.sparkSession
         val (valid, _) = Preassembly.partitionValid(Preassembly.parse(batch))
-        val v = valid.localCheckpoint(false)
+        val v = valid.boundary()
         // checkpoint the slim derived frames too, not just v: their plans
         // otherwise carry the full statement-JSON parse expression tree
         // (hundreds of nested CaseWhen/struct nodes), and EVERY action the
@@ -895,10 +896,10 @@ object Streams {
         // driver time, per action, for work done once here
         val stmts = v
           .select(col("mk_hash"), col("stmt.type").as("stype")).distinct()
-          .localCheckpoint(false)
-        val agents = Preassembly.agentRows(v).localCheckpoint(false)
+          .boundary()
+        val agents = Preassembly.agentRows(v).boundary()
         val counts = v.groupBy("mk_hash", "src").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(false)
+          .boundary()
         // ontology dimension: the persisted signature index yields the
         // batch's generalized-match edges, which the closure maintenance
         // composes with stored key-subset pairs
@@ -915,7 +916,7 @@ object Streams {
         }
         val beliefUpd = IncrementalBelief.upsert(ses, stmts, agents,
           counts, beliefDb, shards, batchId,
-          extraEdges = ontologyEdges).localCheckpoint(false)
+          extraEdges = ontologyEdges).boundary()
         val evidence = v.select(col("raw_stmt_id").as("sid"), col("mk_hash"),
           col("src"), col("raw_stmt_id").as("rid"),
           lit(null).cast("long").as("pmid"))

@@ -3,6 +3,7 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.BlockScope
 import graft.queries.TpchWorld
 import graft.querydsl._
 import graft.service.{HttpApi, QueryService}
@@ -66,6 +67,37 @@ class HttpApiSpec extends AnyFunSuite {
         s"${spark.sparkContext.getPersistentRDDs.size}: " +
         spark.sparkContext.getPersistentRDDs.values
           .map(_.toString).mkString(" | "))
+  }
+
+  test("reliable boundaries leave no blocks and no checkpoint files") {
+    // same N requests with spark.graft.checkpoint.reliable on: each
+    // request's boundaries are reliable checkpoints, and closing the
+    // request's scope must unpersist them AND delete their files
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    spark.conf.set(BlockScope.RELIABLE_CONF, "true")
+    try {
+      assert(get("/statements/from_agents?agent=P5&medscan=true&limit=3")._1
+        == 200)
+      assert(get("/agents/from_agents?agent=P5&medscan=true&limit=3")._1
+        == 200)
+      val baseline = sc.getPersistentRDDs.size
+      (1 to 5).foreach { _ =>
+        assert(get("/statements/from_agents?agent=P5&medscan=true&limit=3")
+          ._1 == 200)
+        assert(get("/agents/from_agents?agent=P5&medscan=true&limit=3")
+          ._1 == 200)
+      }
+      assert(sc.getPersistentRDDs.size <= baseline,
+        s"blocks leaked: baseline $baseline, now ${sc.getPersistentRDDs.size}")
+      val ckDir = sc.getCheckpointDir
+      assert(ckDir.isDefined, "no reliable boundary was created")
+      val left = java.nio.file.Files.walk(java.nio.file.Paths.get(
+          new java.net.URI(ckDir.get).getPath))
+        .iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .toList
+      assert(left.isEmpty, s"checkpoint files leaked: ${left.take(5)}")
+    } finally spark.conf.unset(BlockScope.RELIABLE_CONF)
   }
 
   test("from_agents GET matches the direct service dispatch") {

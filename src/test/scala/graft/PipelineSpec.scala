@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.assembly.{Pipeline, PrincipalDump}
-import graft.core.TypeRegistry
+import graft.core.{BlockScope, TypeRegistry}
 import graft.querydsl._
 
 /** End-to-end lifecycle: principal dumps -> distill -> preassemble ->
@@ -152,9 +153,26 @@ class PipelineSpec extends AnyFunSuite {
         """{"type":"Inhibition","members":[{"name":"X","db_refs":{"HGNC":"7"}},{"name":"Y","db_refs":{"HGNC":"8"}},{"name":"Z","db_refs":{"HGNC":"9"}}]}"""),
     ).toDF("raw_stmt_id", "reading_id", "db_info_id", "src", "raw_json")
     val d2 = dump.copy(rawStatements = dump.rawStatements.unionByName(extra))
-    val ro2 = Pipeline.run(spark, d2, types, Seq("reach"), Seq("signor"))
-    val inh = ro2.sourceMeta.filter(col("type_num") === types.num("Inhibition"))
-      .select("mk_hash", "belief", "agent_count").collect()
+    // run once with local and once with reliable boundaries: every table
+    // of the readonly layer must come out row-for-row the same (the scope
+    // releases each run's blocks and checkpoint files once collected)
+    def run(reliable: Boolean): (Array[Row], Seq[Seq[String]]) = {
+      spark.conf.set(BlockScope.RELIABLE_CONF, reliable.toString)
+      try BlockScope.scoped {
+        val ro2 = Pipeline.run(spark, d2, types, Seq("reach"), Seq("signor"))
+        val inh = ro2.sourceMeta
+          .filter(col("type_num") === types.num("Inhibition"))
+          .select("mk_hash", "belief", "agent_count").collect()
+        val tables = ro2.productIterator.collect { case df: Dataset[_] =>
+          df.toDF().collect().map(_.toString).sorted.toSeq
+        }.toSeq
+        (inh, tables)
+      } finally spark.conf.unset(BlockScope.RELIABLE_CONF)
+    }
+    val (inh, localTables) = run(reliable = false)
+    val (_, reliableTables) = run(reliable = true)
+    assert(reliableTables == localTables,
+      "reliable boundaries changed the readonly rows")
     assert(inh.length == 2)
     val byAgents = inh.map(r => r.getLong(2) -> r.getDouble(1)).toMap
     // the 3-agent Complex-like statement refines the 2-agent one (same

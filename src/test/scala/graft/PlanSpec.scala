@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.BlockScope
 import graft.querydsl._
 import graft.queries.TpchWorld
 import graft.sources.Tables
@@ -141,11 +142,11 @@ class PlanSpec extends AnyFunSuite {
       .select(col("doc_id"), chunk.as("chunk"))
     val bench = Tables.table(spark, dir, "documents")
       .filter(col("doc_id") % 7 === 0).select("doc_id", "text")
-    // materialize = false: the production path truncates lineage at its
-    // fan-out boundaries (so ingest runs once, not once per consumer);
-    // the audit wants the one composed plan those segments add up to
-    val p2 = plan(graft.operators.Crawl.crawlPipeline(
-      chunks, "doc_id", "chunk", bench, materialize = false))
+    // inlined: the production path truncates lineage at its fan-out
+    // boundaries (so ingest runs once, not once per consumer); the audit
+    // wants the one composed plan those segments add up to
+    val p2 = BlockScope.inlined(plan(graft.operators.Crawl.crawlPipeline(
+      chunks, "doc_id", "chunk", bench)))
     assert(p2.contains("BroadcastHashJoin"),
       s"bench/model sides should broadcast:\n$p2")
     assert(!p2.contains("CartesianProduct"),
@@ -327,19 +328,18 @@ class PlanSpec extends AnyFunSuite {
     // drag the whole corpus through ONE task. The plan must show the
     // distributed range sort, and at most one SinglePartition exchange —
     // the <=64-row bucket-totals branch, never the data path.
-    // materialize = false: production truncates lineage at the shared
-    // range exchange (so the input chain runs once, not once per leg);
-    // the audit wants the one composed plan those segments add up to
-    for (df <- Seq(
+    // inlined: production truncates lineage at the shared range exchange
+    // (so the input chain runs once, not once per leg); the audit wants
+    // the one composed plan those segments add up to
+    for (df <- BlockScope.inlined(Seq(
         graft.operators.Curate.seededShuffle(
           Tables.table(spark, dir, "documents").select("doc_id"),
-          "doc_id", "epoch1", materialize = false),
+          "doc_id", "epoch1"),
         graft.operators.Curate.tokenBudgetSelect(
           Tables.table(spark, dir, "documents")
             .select(col("doc_id"), col("n_chars").as("toks"),
               col("doc_id").cast("double").as("score")),
-          "doc_id", "toks", "score", budget = 1000L,
-          materialize = false))) {
+          "doc_id", "toks", "score", budget = 1000L)))) {
       val p = plan(df)
       assert(p.contains("rangepartitioning"),
         s"distributed range sort missing:\n$p")
@@ -449,10 +449,8 @@ class PlanSpec extends AnyFunSuite {
 
     // rocAuc: the cumulative pass range-partitions (Exchange rangepartitioning)
     import spark.implicits._
-    val auc = graft.operators.TextAnalysis.rocAuc(
-      Seq((1L, true), (2L, false)).toDF("s", "y"), "s", "y",
-      materialize = false)
-    val aucp = plan(auc)
+    val aucp = BlockScope.inlined(plan(graft.operators.TextAnalysis.rocAuc(
+      Seq((1L, true), (2L, false)).toDF("s", "y"), "s", "y")))
     assert(aucp.contains("rangepartitioning"),
       s"AUC cumsum not range-partitioned:\n$aucp")
   }
@@ -466,6 +464,29 @@ class PlanSpec extends AnyFunSuite {
       s"no range partition on z_value:\n$p")
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"),
       s"z computation left codegen:\n$p")
+  }
+
+  test("BlockScope is the only code that checkpoints a Dataset") {
+    // every materialization boundary goes through `ds.boundary()`, so the
+    // scope, reliable-mode and inlined contracts reach all of them; a
+    // direct call would silently opt out of all three
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"sources not found from ${root.toAbsolutePath}")
+    val call = """\.(localCheckpoint|checkpoint)\(""".r
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        !f.endsWith("core/BlockScope.scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined =>
+            s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      "direct checkpoint calls outside core/BlockScope.scala (use " +
+        "`.boundary()`):\n" + offenders.mkString("\n"))
   }
 
 }
