@@ -128,8 +128,9 @@ object Pipeline {
         // downstream stages consume parsed/unique/agents subtrees many
         // times each, and re-inlining the (wide-schema) parse per consumer
         // makes analysis memory quadratic in pipeline depth. The lazy
-        // boundary replaces the logical plan with an RDD scan immediately
-        // and materializes on first use.
+        // boundary replaces the logical plan with an RDD scan immediately;
+        // under AQE its creation also runs the subtree's shuffle-map
+        // stages, and only the final stage waits for the first use.
         df.boundary()
     }
 
@@ -198,11 +199,13 @@ object Pipeline {
         col("rid") === col("rid_join"), "left")
       .select(col("sid"), col("mk_hash"), col("src"), col("rid"),
         coalesce(col("pmid"), lit(-1L)).as("pmid"))
+      .boundary() // read by the mesh rows, the refs and three build frames
 
     // 6. mesh annotations attach per evidence via the paper id
     val mesh = evidence.select("sid", "pmid")
       .join(dump.meshAnnotations, "pmid")
       .select("sid", "mesh_num", "is_concept")
+      .boundary() // read by the build's mesh counts and raw_stmt_mesh
 
     // 7. statements with computed belief + serialized payload (pa_json
     //    rides on fast_raw_pa_link for egress) -> readonly build. The

@@ -3,6 +3,7 @@ package graft.assembly
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.TypeRegistry
+import graft.core.BlockScope.Boundary
 import graft.querydsl.ReadonlyTables
 
 /** Normalized inputs to the readonly build — the Spark analog of the
@@ -37,6 +38,21 @@ final case class StatementWorld(
   *     (SURVEY.md §1.4);
   *   - the type dictionary joins as a broadcast dimension (the reference
   *     inlines it as a VALUES clause, readonly_schema.py:61-66);
+  *   - like the reference's CREATE_ORDER, which builds every meta table
+  *     from per-statement columns computed once, each shared frame sits
+  *     behind one lazy `boundary()` at its fan-out point, so no consumer
+  *     re-runs its subtree:
+  *       - `stmtMeta` (type, belief, evidence count and source map, agent
+  *         count per hash) feeds source_meta, the name/text/other meta
+  *         split and both mesh meta tables, and agent_interactions through
+  *         source_meta;
+  *       - `meshCounts` (distinct PMIDs per hash, mesh id and concept
+  *         flag) feeds mesh_term_meta and mesh_concept_meta, which filter
+  *         it on the flag;
+  *       - [[Pipeline.run]] hands in its evidence and mesh rows behind
+  *         boundaries of its own: evidence feeds the evidence aggregation,
+  *         the mesh counts, fast_raw_pa_link, reading_ref_link and the mesh
+  *         rows; the mesh rows feed the mesh counts and raw_stmt_mesh;
   *   - at deployment the outputs are written bucketed by mk_hash so the DSL
   *     compiler's semi/anti joins co-locate.
   */
@@ -107,7 +123,8 @@ object ReadonlyBuilder {
         .withColumn("is_active", lit(null).cast("boolean"))
 
     // one row per hash with every sorting/grouping column the meta tables
-    // denormalize onto their rows (readonly_schema.py:139-157)
+    // denormalize onto their rows (readonly_schema.py:139-157); six tables
+    // read it, so it is computed once
     val stmtMeta = stmts
       .join(broadcast(typeDim), "stype")
       .join(evAgg, "mk_hash")
@@ -115,6 +132,7 @@ object ReadonlyBuilder {
       .select(
         col("mk_hash"), col("type_num"), col("belief"), col("ev_count"),
         col("agent_count"), col("src_json"), col("activity"), col("is_active"))
+      .boundary()
 
     // --- source_meta ------------------------------------------------------
     // flags derived from the source map (readonly_schema.py:902-954):
@@ -150,14 +168,15 @@ object ReadonlyBuilder {
     // --- mesh meta --------------------------------------------------------
     // raw (sid, mesh) ⨝ evidence -> per (hash, mesh) distinct-PMID counts
     // (mesh_*_ref_counts, readonly_schema.py:615-679) with the statement
-    // sorting columns attached (mesh_*_meta :1158-1255).
-    val meshJoined = world.mesh
+    // sorting columns attached (mesh_*_meta :1158-1255). One aggregation
+    // keyed by the concept flag too serves both tables.
+    val meshCounts = world.mesh
       .join(world.evidence.select("sid", "mk_hash", "pmid"), "sid")
-    def meshMeta(concept: Boolean) =
-      meshJoined
-        .filter(if (concept) col("is_concept") === 1 else col("is_concept") === 0)
-        .groupBy("mk_hash", "mesh_num")
-        .agg(countDistinct("pmid").as("ref_count"))
+      .groupBy("mk_hash", "mesh_num", "is_concept")
+      .agg(countDistinct("pmid").as("ref_count"))
+      .boundary()
+    def meshMeta(concept: Int) =
+      meshCounts.filter(col("is_concept") === concept).drop("is_concept")
         .join(stmtCols, "mk_hash")
 
     // --- fast_raw_pa_link / reading_ref_link ------------------------------
@@ -228,8 +247,8 @@ object ReadonlyBuilder {
       textMeta = textMeta,
       otherMeta = otherMeta,
       sourceMeta = sourceMeta,
-      meshTermMeta = meshMeta(concept = false),
-      meshConceptMeta = meshMeta(concept = true),
+      meshTermMeta = meshMeta(concept = 0),
+      meshConceptMeta = meshMeta(concept = 1),
       fastRawPaLink = frpl,
       rawStmtMesh = world.mesh,
       readingRefLink = world.refs,

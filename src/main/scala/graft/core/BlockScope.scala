@@ -21,6 +21,14 @@ import org.apache.spark.storage.StorageLevel
   *   - **Default (local).** `boundary(eager)` is exactly
   *     `localCheckpoint(eager)`: the plan is cut at a LogicalRDD scan and
   *     the rows live in executor block storage with truncated lineage.
+  *   - **Lazy is not free.** A lazy boundary is planned when it is
+  *     created, and under AQE (on in every GraftSession) planning runs the
+  *     subtree's shuffle-map stages then and there; only the final stage,
+  *     which stores the rows, waits for the first use. Its creation
+  *     therefore costs the subtree's exchanges, once.
+  *   - **Named.** The boundary's RDD is named after the caller's
+  *     `File.scala:line`, so the RDD lists of stage listings and the
+  *     storage listing say which boundary a stage reads or a block holds.
   *   - **Scope.** Inside [[scoped]] (thread-local, so concurrent requests
   *     on the service pool never touch each other's blocks) every boundary
   *     created on the thread is registered, and closing the scope
@@ -65,10 +73,22 @@ object BlockScope {
       val ck =
         if (!reliable) ds.localCheckpoint(eager)
         else reliableCheckpoint(spark, ds, eager)
-      val buf = active.get()
-      if (buf != null) checkpointRdd(ck).foreach(buf.add)
+      val site = callerSite
+      checkpointRdd(ck).foreach { rdd =>
+        rdd.setName(site)
+        val buf = active.get()
+        if (buf != null) buf.add(rdd)
+      }
       ck
     }
+
+  /** `File.scala:line` of the first stack frame outside this file. */
+  private def callerSite: String =
+    Thread.currentThread.getStackTrace.iterator
+      .drop(1) // getStackTrace itself
+      .find(f => !f.getClassName.startsWith("graft.core.BlockScope"))
+      .map(f => s"${f.getFileName}:${f.getLineNumber}")
+      .getOrElse("boundary")
 
   private def reliableCheckpoint[T](
       spark: SparkSession, ds: Dataset[T], eager: Boolean): Dataset[T] = {

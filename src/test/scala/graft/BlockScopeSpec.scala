@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.core.BlockScope
 import graft.core.BlockScope.Boundary
 
-/** The materialization boundary's reliable-mode and `inlined` contracts:
-  * a lazy reliable boundary computes its subtree once, a scope releases
-  * its files, and `inlined` makes every boundary transparent.
+/** The materialization boundary's contracts: under AQE a lazy boundary
+  * runs its subtree's shuffle stages when it is created, each boundary's
+  * RDD is named after its caller, a lazy reliable boundary computes its
+  * subtree once, a scope releases its files, and `inlined` makes every
+  * boundary transparent.
   */
 class BlockScopeSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local("blockscope-test")
@@ -59,5 +64,37 @@ class BlockScopeSpec extends AnyFunSuite {
       assert(df.boundary(eager = true) eq df)
     }
     assert(!(df.boundary() eq df))
+  }
+
+  test("under AQE a lazy boundary over a groupBy starts a job when it is created") {
+    val sc = spark.sparkContext
+    val aqe = "spark.sql.adaptive.enabled"
+    val prevAqe = spark.conf.get(aqe)
+    val group = "lazy-boundary-creation"
+    spark.conf.set(aqe, "true")
+    sc.setJobGroup(group, "lazy boundary over a groupBy")
+    try {
+      val grouped = spark.range(0, 200, 1, 4)
+        .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))
+      val b = grouped.boundary()
+      // nothing has been read from the boundary yet
+      eventually(timeout(20.seconds)) {
+        assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty,
+          "creating a lazy boundary ran no job")
+      }
+      sc.clearJobGroup()
+      assert(b.collect().toSet == grouped.collect().toSet)
+    } finally {
+      sc.clearJobGroup()
+      spark.conf.set(aqe, prevAqe)
+    }
+  }
+
+  test("a boundary's RDD is named after its caller's file and line") {
+    Seq(spark.range(10).boundary(), spark.range(10).boundary(eager = true))
+      .map(_.queryExecution.logical).foreach { case lr: LogicalRDD =>
+        val name = Option(lr.rdd.name).getOrElse("")
+        assert(name.startsWith("BlockScopeSpec.scala:"), name)
+      }
   }
 }

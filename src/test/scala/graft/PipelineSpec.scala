@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.assembly.{Pipeline, PrincipalDump}
+import graft.assembly.{Pipeline, PrincipalDump, ReadonlyBuilder}
 import graft.core.{BlockScope, TypeRegistry}
 import graft.querydsl._
 
@@ -180,5 +182,42 @@ class PipelineSpec extends AnyFunSuite {
     // statement's evidence = own + refiner = 2 reach => 1-(0.05+0.09)=0.86
     assert(math.abs(byAgents(3L) - 0.65) < 1e-9)
     assert(math.abs(byAgents(2L) - 0.86) < 1e-9)
+  }
+
+  test("the readonly build computes the per-statement columns once for six tables") {
+    def plan(df: DataFrame) = df.queryExecution.optimizedPlan
+    def scans(df: DataFrame): Set[Int] =
+      plan(df).collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    // source_meta reads nothing but the per-statement frame
+    val shared = scans(ro.sourceMeta)
+    assert(shared.size == 1, s"source_meta scans $shared")
+    val readers = Seq("name_meta" -> ro.nameMeta, "text_meta" -> ro.textMeta,
+      "other_meta" -> ro.otherMeta, "source_meta" -> ro.sourceMeta,
+      "mesh_term_meta" -> ro.meshTermMeta,
+      "mesh_concept_meta" -> ro.meshConceptMeta)
+    readers.foreach { case (name, df) =>
+      assert(shared.subsetOf(scans(df)), s"$name does not scan $shared")
+      val evAggs = plan(df).collect {
+        case a: Aggregate if a.aggregateExpressions.exists(_.name == "ev_count") => a
+      }
+      assert(evAggs.isEmpty, s"$name recomputes ev_count")
+    }
+  }
+
+  test("the readonly build gives the same rows with its boundaries inlined") {
+    def rows(ro: ReadonlyTables): Seq[(String, Map[Row, Int])] =
+      ro.productElementNames.zip(ro.productIterator).collect {
+        case (name, df: Dataset[_]) =>
+          name -> df.toDF().collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+      }.toSeq
+    def build() = ReadonlyBuilder.build(spark, Fixture.world(spark), Fixture.types,
+      Fixture.readers, Fixture.dbs, complexTypeNum = Fixture.types.toNum.get("Complex"))
+    val bounded = rows(build())
+    val inlined = rows(BlockScope.inlined(build()))
+    assert(bounded.size == 11)
+    bounded.zip(inlined).foreach { case ((name, b), (_, i)) =>
+      assert(b.nonEmpty, s"$name is empty")
+      assert(b == i, s"$name differs with the boundaries inlined")
+    }
   }
 }
