@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.BlockScope.Boundary
+import graft.core.QueryProfile
 
 /** Scale dress rehearsal: the sf tests prove CORRECTNESS; this harness
   * MEASURES the 100 TB design claims on synthetically scaled data.
@@ -12,10 +12,14 @@ import graft.core.BlockScope.Boundary
   * (default 8): the input tables replicate in-engine (explode + id
   * re-salting — no files written) and a Zipf-style hot key is PLANTED
   * (25% of all event rows collapse onto one user), the adversarial shape
-  * real clickstreams have. For every run the harness records, from a
-  * task-metrics listener and the executed adaptive plan:
+  * real clickstreams have. Every run is one
+  * [[graft.core.QueryProfile.measure]] (after one throwaway warmup), which
+  * records:
   *
-  *   - wall seconds and output rows;
+  *   - collect seconds, output rows, and `build_s`: the time to construct
+  *     the Dataset, which under AQE runs the shuffle-map stages of every
+  *     lazy boundary the operator creates (their tasks count in the byte
+  *     fields below too);
   *   - total shuffle write bytes (does data movement scale linearly?);
   *   - max single-task shuffle read and its share of the total — the
   *     skew signal: a share that GROWS with replication means some task
@@ -30,45 +34,12 @@ import graft.core.BlockScope.Boundary
   * max-task share staying flat at higher replication while the plain one
   * grows. `range_auto` runs the auto-rewritten theta join WITH planted
   * open-interval sentinels, exercising the bounded-overflow split at
-  * scale. Results land in the bench artifact under "stress"
-  * ([[Bench]] runs this after the query chain; standalone: `runMain
-  * graft.Stress`).
+  * scale. Results go on one `{"diag":"stress_detail",...}` line: [[Bench]]
+  * runs this after the query chain and tees the line to
+  * `target/bench_c<cpus>.json`; standalone, `runMain graft.Stress` prints
+  * it.
   */
 object Stress {
-
-  final case class M(
-      sec: Double, rows: Long, shufWriteBytes: Long,
-      maxTaskReadBytes: Long, sumTaskReadBytes: Long,
-      shuffleStages: Int, broadcastStages: Int, err: String = null) {
-    def maxTaskShare: Double =
-      if (sumTaskReadBytes <= 0) 0.0
-      else maxTaskReadBytes.toDouble / sumTaskReadBytes
-    /** Sub-8MB total exchange: AQE coalesces it to one (or very few)
-      * tasks, so max_task_share reads ~1.0 BY CONSTRUCTION — it is not a
-      * skew signal there. Flagged in the emitted JSON so a reader does
-      * not misread a tiny workload as a hot key. */
-    def tinyExchange: Boolean = sumTaskReadBytes < (8L << 20)
-  }
-
-  private final class TaskListener extends SparkListener {
-    private val sum = new java.util.concurrent.atomic.AtomicLong
-    private val max = new java.util.concurrent.atomic.AtomicLong
-    private val write = new java.util.concurrent.atomic.AtomicLong
-    def reset(): Unit = { sum.set(0); max.set(0); write.set(0) }
-    def snapshot: (Long, Long, Long) = (sum.get, max.get, write.get)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        val r = m.shuffleReadMetrics.totalBytesRead
-        sum.addAndGet(r)
-        max.accumulateAndGet(r, (a: Long, b: Long) => math.max(a, b))
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
-  private def occ(s: String, pat: String): Int =
-    (pat + " (\\d+)").r.findAllMatchIn(s).map(_.group(1)).toSet.size
 
   /** Replicate `rep`-fold with re-salted id columns; every replica keeps
     * the original's key/text payload, so replication multiplies per-key
@@ -89,9 +60,8 @@ object Stress {
         when(pmod(col("event_id"), lit(4)) === 0, lit(-42L))
           .otherwise(col("user_id")))
 
-  def run(spark: SparkSession, dir: String, repx: Int): Seq[(String, M)] = {
-    val listener = new TaskListener
-    spark.sparkContext.addSparkListener(listener)
+  def run(spark: SparkSession, dir: String,
+      repx: Int): Seq[(String, QueryProfile)] = {
     // test-scale shuffles are megabytes, so AQE's 64 MB advisory target
     // would coalesce every exchange into one task and HIDE the planted
     // skew; 1 MB targets keep the exchange multi-task, so the max-task
@@ -103,52 +73,16 @@ object Stress {
     spark.conf.set(advisory, "1m")
     spark.conf.set(minPart, "1m")
     try {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, M)]
+      val out =
+        scala.collection.mutable.ArrayBuffer.empty[(String, QueryProfile)]
       def measure(name: String)(dfByName: => DataFrame): Unit = {
-        // hash every output column: a bare count(1) would let Catalyst
-        // prune the operator's payload (and with it the windows/joins
-        // being measured) out of the plan
-        def mk(): DataFrame = {
-          val df = dfByName
-          df.select(pmod(xxhash64(struct(df.columns.map(col): _*)),
-            lit(1000000007L)).as("h"))
-            .agg(count(lit(1)).as("n"),
-              org.apache.spark.sql.functions.sum(col("h"))) // ANSI-safe
-        }
-        // NonFatal only: an OOM or other fatal JVM error must crash the
-        // harness loudly, not be recorded as a normal-looking entry. A
-        // recoverable failure is surfaced as an explicit err marker in
-        // the emitted JSON so a dead workload can't read as a fast one.
-        var lastErr: String = null
-        def once(probe: DataFrame): Long =
-          try probe.collect().head.getLong(0)
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              lastErr = s"${e.getClass.getSimpleName}: " +
-                String.valueOf(e.getMessage).take(200)
-              -1L
-          }
         // warmup on a THROWAWAY plan instance: codegen + JIT paid, but the
-        // timed run rebuilds the Dataset so no materialized AQE stage from
-        // the warmup is reused
-        once(mk())
-        val probe = mk()
-        // the listener bus delivers TaskEnd asynchronously: without this
-        // drain, straggler WARMUP events can land after reset() and
-        // inflate the measured run's shuffle/max-task numbers — the same
-        // lag the post-run sleep below absorbs
-        Thread.sleep(1500)
-        listener.reset()
-        val t0 = System.nanoTime()
-        val rows = once(probe)
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1500) // listener bus drains asynchronously
-        val (sum, max, write) = listener.snapshot
-        val plan = probe.queryExecution.executedPlan.toString
-        out += name -> M(sec, rows, write, max, sum,
-          occ(plan, "ShuffleQueryStage"), occ(plan, "BroadcastQueryStage"),
-          err = lastErr)
-        System.err.println(s"[stress] $name done in ${fmt(sec)}s")
+        // measured run rebuilds the Dataset so no materialized AQE stage
+        // from the warmup is reused
+        QueryProfile.measure(spark)(dfByName)
+        val p = QueryProfile.measure(spark)(dfByName)
+        out += name -> p
+        System.err.println(s"[stress] $name done in ${Bench.fmt(p.sec)}s")
       }
 
       for (rep <- Seq(1, repx).distinct) {
@@ -400,7 +334,6 @@ object Stress {
       }
       out.toSeq
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -408,30 +341,33 @@ object Stress {
     }
   }
 
-  private def fmt(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+  /** Max single-task shuffle read over the total: the skew signal. */
+  private def maxTaskShare(p: QueryProfile): Double =
+    if (p.sumTaskReadBytes <= 0) 0.0
+    else p.maxTaskReadBytes.toDouble / p.sumTaskReadBytes
 
-  /** Full-detail JSON object (one entry per workload@rep). */
-  def detailJson(results: Seq[(String, M)]): String =
-    results.map { case (k, m) =>
-      s""""$k":{"sec":${fmt(m.sec)},"rows":${m.rows},""" +
-        s""""shuffle_write_mb":${fmt(m.shufWriteBytes / 1e6)},""" +
-        s""""max_task_read_mb":${fmt(m.maxTaskReadBytes / 1e6)},""" +
-        s""""max_task_share":${fmt(m.maxTaskShare)},""" +
-        s""""shuffles":${m.shuffleStages},"broadcasts":${m.broadcastStages}""" +
-        (if (m.tinyExchange) s""","tiny_exchange":true""" else "") +
-        (if (m.err == null) "}"
-         else s""","err":${jsonStr(m.err)}}""")
-    }.mkString("{", ",", "}")
-
-  /** Compact form for the tail-trimmed final bench line: seconds + the
-    * skew signal only. */
-  def compactJson(results: Seq[(String, M)]): String =
-    results.map { case (k, m) =>
-      s""""$k":{"sec":${fmt(m.sec)},"mts":${fmt(m.maxTaskShare)}""" +
-        (if (m.tinyExchange) s""","tiny":true""" else "") +
-        (if (m.err == null) "}" else s""","err":${jsonStr(m.err)}}""")
-    }.mkString("{", ",", "}")
+  /** The `stress_detail` line: one entry per workload@rep. A sub-8MB total
+    * exchange is flagged `tiny_exchange`: AQE coalesces it to one (or very
+    * few) tasks, so max_task_share reads ~1.0 BY CONSTRUCTION there and is
+    * not a skew signal. */
+  def detailLine(dir: String, repx: Int,
+      results: Seq[(String, QueryProfile)]): String = {
+    import Bench.fmt
+    results.map { case (k, p) =>
+      s""""$k":{"sec":${fmt(p.sec)},"build_s":${fmt(p.buildSec)},""" +
+        s""""rows":${p.rows},""" +
+        s""""shuffle_write_mb":${fmt(p.shuffleWriteBytes / 1e6)},""" +
+        s""""max_task_read_mb":${fmt(p.maxTaskReadBytes / 1e6)},""" +
+        s""""max_task_share":${fmt(maxTaskShare(p))},""" +
+        s""""shuffles":${p.shuffleStages},"broadcasts":${p.broadcastStages}""" +
+        (if (p.sumTaskReadBytes < (8L << 20)) s""","tiny_exchange":true"""
+         else "") +
+        (if (p.err == null) "}"
+         else s""","err":${jsonStr(p.err)}}""")
+    }.mkString(
+      s"""{"diag":"stress_detail","sf":"$dir","repx":$repx,"stress":{""",
+      ",", "}}")
+  }
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -445,11 +381,7 @@ object Stress {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repx = sys.env.get("SPARK_GRAFT_STRESS_X").map(_.toInt).getOrElse(8)
     val spark = GraftSession.local("graft-stress")
-    val results = run(spark, dir, repx)
-    println(s"""{"diag":"stress_detail","sf":"$dir","repx":$repx,""" +
-      s""""stress":${detailJson(results)}}""")
-    println(s"""{"metric":"stress","sf":"$dir","repx":$repx,""" +
-      s""""stress":${compactJson(results)}}""")
+    println(detailLine(dir, repx, run(spark, dir, repx)))
     spark.stop()
   }
 }

@@ -466,27 +466,42 @@ class PlanSpec extends AnyFunSuite {
       s"z computation left codegen:\n$p")
   }
 
-  test("BlockScope is the only code that checkpoints a Dataset") {
-    // every materialization boundary goes through `ds.boundary()`, so the
-    // scope, reliable-mode and inlined contracts reach all of them; a
-    // direct call would silently opt out of all three
+  /** Lines of `src/main/scala` outside the file `owner` that match `pat`. */
+  private def sourceLinesOutside(owner: String,
+      pat: scala.util.matching.Regex): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"sources not found from ${root.toAbsolutePath}")
-    val call = """\.(localCheckpoint|checkpoint)\(""".r
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") &&
-        !f.endsWith("core/BlockScope.scala"))
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.endsWith(owner))
       .flatMap { f =>
         java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if call.findFirstIn(line).isDefined =>
+          case (line, i) if pat.findFirstIn(line).isDefined =>
             s"$f:${i + 1}: ${line.trim}"
         }
       }.toList
+  }
+
+  test("BlockScope is the only code that checkpoints a Dataset") {
+    // every materialization boundary goes through `ds.boundary()`, so the
+    // scope, reliable-mode and inlined contracts reach all of them; a
+    // direct call would silently opt out of all three
+    val offenders = sourceLinesOutside("core/BlockScope.scala",
+      """\.(localCheckpoint|checkpoint)\(""".r)
     assert(offenders.isEmpty,
       "direct checkpoint calls outside core/BlockScope.scala (use " +
         "`.boundary()`):\n" + offenders.mkString("\n"))
+  }
+
+  test("QueryProfile is the only code that extends SparkListener") {
+    // one listener, registered and removed per measurement, so harnesses
+    // cannot drift apart on what they count or leak listeners
+    val offenders = sourceLinesOutside("core/QueryProfile.scala",
+      """(extends|new)\s+[\w.]*\bSparkListener\b""".r)
+    assert(offenders.isEmpty,
+      "SparkListener subclasses outside core/QueryProfile.scala (use " +
+        "`QueryProfile.measure`):\n" + offenders.mkString("\n"))
   }
 
 }
