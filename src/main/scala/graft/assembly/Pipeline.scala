@@ -2,7 +2,7 @@ package graft.assembly
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.TypeRegistry
+import graft.core.{BlockScope, TypeRegistry}
 import graft.querydsl.ReadonlyTables
 import graft.core.BlockScope.Boundary
 
@@ -161,51 +161,62 @@ object Pipeline {
       valid.withColumn("stype", col("stmt.type")),
       checkpointDir, "parsed")
 
-    val uniq = checkpoint(
-      Preassembly.dedup(parsed).select("mk_hash", "raw_stmt_id", "stype", "stmt"),
-      checkpointDir, "unique_statements")
+    // 3-6 run as three concurrent branches (BlockScope.fork), each
+    // creating its boundaries; the three are independent once parsed is
+    // cut, and joined before belief:
+    //   - uniq -> agents -> refinement edges -> transitive closure;
+    //   - srcCounts;
+    //   - evidence -> mesh.
+    val ((uniq, agents, closure), srcCounts, (evidence, mesh)) =
+      BlockScope.fork(spark)({
+        val uniq = checkpoint(
+          Preassembly.dedup(parsed).select("mk_hash", "raw_stmt_id", "stype", "stmt"),
+          checkpointDir, "unique_statements")
 
-    val srcCounts = checkpoint(
-      Preassembly.sourceCounts(parsed), checkpointDir, "source_counts")
+        // 3. agents (pa_agents), from the kept payload of each unique statement
+        val agents = checkpoint(
+          Preassembly.agentRows(uniq), checkpointDir, "pa_agents")
 
-    // 3. agents (pa_agents), from the kept payload of each unique statement
-    val agents = checkpoint(
-      Preassembly.agentRows(uniq), checkpointDir, "pa_agents")
+        // 4. refinement DAG; with an ontology dimension the
+        //    isa/partof-generalized edges join the key-subset ones (the
+        //    reference's single Preassembler predicate covers both shapes,
+        //    export_assembly.py:739-745)
+        val edges = ontology match {
+          case Some(ont) => refinementEdges(uniq, agents)
+            .union(Refinement.ontologyRefinementEdges(
+              uniq.select("mk_hash", "stype"), agents, ont))
+            .distinct()
+          case None => refinementEdges(uniq, agents)
+        }
+        (uniq, agents, Refinement.transitiveClosure(edges))
+      },
+      checkpoint(Preassembly.sourceCounts(parsed), checkpointDir, "source_counts"),
+      {
+        // 5. evidence rows with paper links: rid -> trid -> pmid
+        val readingRefs = dump.readings.select("rid", "trid")
+          .join(dump.textRefs, "trid")
+        val evidence = parsed.select(
+          col("raw_stmt_id").as("sid"), col("mk_hash"), col("src"),
+          coalesce(col("reading_id"), -col("raw_stmt_id")).as("rid"))
+          .join(readingRefs.withColumnRenamed("rid", "reading_id")
+            .select(col("reading_id").as("rid_join"), col("pmid")),
+            col("rid") === col("rid_join"), "left")
+          .select(col("sid"), col("mk_hash"), col("src"), col("rid"),
+            coalesce(col("pmid"), lit(-1L)).as("pmid"))
+          .boundary() // read by the mesh rows, the refs and three build frames
 
-    // 4. refinement DAG + belief (ancestor-summed evidence); with an
-    //    ontology dimension the isa/partof-generalized edges join the
-    //    key-subset ones (the reference's single Preassembler predicate
-    //    covers both shapes, export_assembly.py:739-745)
-    val edges = ontology match {
-      case Some(ont) => refinementEdges(uniq, agents)
-        .union(Refinement.ontologyRefinementEdges(
-          uniq.select("mk_hash", "stype"), agents, ont))
-        .distinct()
-      case None => refinementEdges(uniq, agents)
-    }
-    val closure = Refinement.transitiveClosure(edges)
+        // 6. mesh annotations attach per evidence via the paper id
+        val mesh = evidence.select("sid", "pmid")
+          .join(dump.meshAnnotations, "pmid")
+          .select("sid", "mesh_num", "is_concept")
+          .boundary() // read by the build's mesh counts and raw_stmt_mesh
+        (evidence, mesh)
+      })
+
+    // belief: ancestor-summed evidence over the closure
     val belief = Belief.scoreWithRefinements(
       srcCounts.select("mk_hash", "src_json"), closure)
       .select(col("mk_hash"), col("belief"))
-
-    // 5. evidence rows with paper links: rid -> trid -> pmid
-    val readingRefs = dump.readings.select("rid", "trid")
-      .join(dump.textRefs, "trid")
-    val evidence = parsed.select(
-      col("raw_stmt_id").as("sid"), col("mk_hash"), col("src"),
-      coalesce(col("reading_id"), -col("raw_stmt_id")).as("rid"))
-      .join(readingRefs.withColumnRenamed("rid", "reading_id")
-        .select(col("reading_id").as("rid_join"), col("pmid")),
-        col("rid") === col("rid_join"), "left")
-      .select(col("sid"), col("mk_hash"), col("src"), col("rid"),
-        coalesce(col("pmid"), lit(-1L)).as("pmid"))
-      .boundary() // read by the mesh rows, the refs and three build frames
-
-    // 6. mesh annotations attach per evidence via the paper id
-    val mesh = evidence.select("sid", "pmid")
-      .join(dump.meshAnnotations, "pmid")
-      .select("sid", "mesh_num", "is_concept")
-      .boundary() // read by the build's mesh counts and raw_stmt_mesh
 
     // 7. statements with computed belief + serialized payload (pa_json
     //    rides on fast_raw_pa_link for egress) -> readonly build. The

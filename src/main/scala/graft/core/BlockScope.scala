@@ -1,6 +1,9 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.Path
+import org.apache.spark.GraftSparkHooks
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -48,6 +51,15 @@ import org.apache.spark.storage.StorageLevel
   *   - **Inlined.** Inside [[inlined]] (thread-local) `boundary` returns its
   *     input unchanged, so a plan audit sees the one composed plan the
   *     production segments add up to.
+  *   - **Concurrent.** [[fork]] runs a few independent bodies, each on a
+  *     thread started for the call, and joins them. Each thread carries the
+  *     caller's Spark local properties (so its jobs keep the caller's job
+  *     group), active session, [[inlined]] flag and [[scoped]] registry;
+  *     boundaries it creates are released with the caller's scope. The
+  *     first failure is rethrown as thrown, after every body has ended.
+  *     Apart from HttpApi's handler pool, no other code in `src/main/scala`
+  *     starts threads (PlanSpec scans for it): a pooled thread carries
+  *     whatever job group its last user set.
   */
 object BlockScope {
 
@@ -60,7 +72,7 @@ object BlockScope {
       BlockScope.materialize(ds, eager)
   }
 
-  private val active = new ThreadLocal[java.util.ArrayList[RDD[_]]]
+  private val active = new ThreadLocal[ConcurrentLinkedQueue[RDD[_]]]
   private val inline = ThreadLocal.withInitial[java.lang.Boolean](() => false)
   private val dirLock = new Object
 
@@ -121,7 +133,7 @@ object BlockScope {
     * scope closes. Nested scopes release only their own registrations. */
   def scoped[T](f: => T): T = {
     val prev = active.get()
-    val buf = new java.util.ArrayList[RDD[_]]
+    val buf = new ConcurrentLinkedQueue[RDD[_]]
     active.set(buf)
     try f
     finally {
@@ -147,5 +159,57 @@ object BlockScope {
     inline.set(true)
     try f
     finally inline.set(prev)
+  }
+
+  /** Run `a`, `b` and `c` concurrently, as the `Seq` form of `fork` does. */
+  def fork[A, B, C](spark: SparkSession)(a: => A, b: => B, c: => C): (A, B, C) = {
+    val Seq(ra, rb, rc) = fork(spark, Seq(() => a, () => b, () => c))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B], rc.asInstanceOf[C])
+  }
+
+  /** Run `bodies` concurrently, one thread each, and return their results
+    * in order. Every thread starts with the calling thread's state, as
+    * Spark's `SQLExecution.withThreadLocalCaptured` hands it over: a copy
+    * of the SparkContext's local properties (job group, description,
+    * scheduler pool), `spark` as the active session, and this object's
+    * [[inlined]] flag and [[scoped]] registry. The threads inherit nothing
+    * else. Returns when every body has ended; the first failure is
+    * rethrown unwrapped, later ones attached to it as suppressed. */
+  def fork[T](spark: SparkSession, bodies: Seq[() => T]): Seq[T] = {
+    val sc = spark.sparkContext
+    val props = GraftSparkHooks.localProperties(sc)
+    val isInlined = inline.get
+    val registry = active.get()
+    val results = new Array[Any](bodies.size)
+    val failure = new AtomicReference[Throwable]
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      val run: Runnable = () =>
+        try {
+          GraftSparkHooks.setLocalProperties(sc, props)
+          SparkSession.setActiveSession(spark)
+          inline.set(isInlined)
+          active.set(registry)
+          results(i) = body()
+        } catch {
+          case t: Throwable =>
+            if (!failure.compareAndSet(null, t)) failure.get.addSuppressed(t)
+        }
+      // inheritThreadLocals = false: the body sees what is set above only
+      new Thread(null, run, s"blockscope-fork-$i", 0L, false)
+    }
+    threads.foreach { t => t.setDaemon(true); t.start() }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch {
+          case _: InterruptedException =>
+            interrupted = true
+            threads.foreach(_.interrupt())
+        }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    Option(failure.get).foreach(throw _)
+    results.toSeq.asInstanceOf[Seq[T]]
   }
 }

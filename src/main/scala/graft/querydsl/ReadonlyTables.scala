@@ -1,6 +1,7 @@
 package graft.querydsl
 
 import org.apache.spark.sql.DataFrame
+import graft.core.BlockScope
 
 /** The assembled readonly layer the query DSL compiles against — the Spark
   * analog of the reference's denormalized readonly schema
@@ -50,13 +51,18 @@ final case class ReadonlyTables(
     this
   }
 
-  /** Persist AND materialize every table NOW (foreach-count). Benchmarks
-    * must call this before their timed loop: a lazily-materializing shared
-    * cache bills its whole build to whichever query touches it first,
-    * which made round-over-round per-query deltas unattributable. */
+  /** Persist AND materialize every table NOW. Every table is persisted
+    * first, so a table built over another (agentInteractions over
+    * sourceMeta) reads its cache; then the tables are counted
+    * concurrently, one `BlockScope.fork` thread each, under the caller's
+    * job group. Benchmarks must call this before their timed loop: a
+    * lazily-materializing shared cache bills its whole build to whichever
+    * query touches it first, which made round-over-round per-query deltas
+    * unattributable. */
   def materializeAll(): ReadonlyTables = {
     persistAll()
-    productIterator.foreach { case df: DataFrame => df.count() }
+    BlockScope.fork(nameMeta.sparkSession,
+      productIterator.collect { case df: DataFrame => () => df.count() }.toSeq)
     this
   }
 }

@@ -1,18 +1,27 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftSparkHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
+import graft.assembly.ReadonlyBuilder
 import graft.core.BlockScope
 import graft.core.BlockScope.Boundary
+import graft.querydsl.ReadonlyTables
 
 /** The materialization boundary's contracts: under AQE a lazy boundary
   * runs its subtree's shuffle stages when it is created, each boundary's
   * RDD is named after its caller, a lazy reliable boundary computes its
-  * subtree once, a scope releases its files, and `inlined` makes every
-  * boundary transparent.
+  * subtree once, a scope releases its files, `inlined` makes every
+  * boundary transparent, and `fork` runs bodies with the caller's thread
+  * state, rethrows their first failure as thrown and leaves no thread.
   */
 class BlockScopeSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local("blockscope-test")
@@ -96,5 +105,92 @@ class BlockScopeSpec extends AnyFunSuite {
         val name = Option(lr.rdd.name).getOrElse("")
         assert(name.startsWith("BlockScopeSpec.scala:"), name)
       }
+  }
+
+  /** The job group of every job `f` starts, read off its start event. */
+  private def jobGroups(f: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    GraftSparkHooks.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try f
+    finally {
+      GraftSparkHooks.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    groups.asScala.toSeq
+  }
+
+  private def tables(ro: ReadonlyTables): Seq[DataFrame] =
+    ro.productIterator.collect { case df: DataFrame => df }.toSeq
+
+  test("fork bodies run with the caller's job group, active session and inlined flag") {
+    val sc = spark.sparkContext
+    val df = spark.range(10).toDF("id")
+    sc.setJobGroup("fork-group", "fork bodies")
+    try {
+      val seen = BlockScope.inlined(BlockScope.fork(spark, (1 to 3).map { i => () =>
+        (sc.getLocalProperty("spark.jobGroup.id"),
+          SparkSession.getActiveSession.contains(spark),
+          df.boundary() eq df,
+          spark.range(0, i * 10, 1, 2).count())
+      }))
+      assert(seen == (1 to 3).map(i => ("fork-group", true, true, i * 10L)))
+    } finally sc.clearJobGroup()
+  }
+
+  test("every job materializeAll starts carries the caller's job group") {
+    val sc = spark.sparkContext
+    val ro = ReadonlyBuilder.build(spark, Fixture.world(spark), Fixture.types,
+      Fixture.readers, Fixture.dbs, complexTypeNum = Fixture.types.toNum.get("Complex"))
+    sc.setJobGroup("materialize-all", "materializeAll")
+    val groups = try jobGroups(ro.materializeAll()) finally sc.clearJobGroup()
+    try {
+      assert(groups.nonEmpty, "materializeAll started no job")
+      assert(groups.forall(_ == "materialize-all"), groups.groupBy(identity).map {
+        case (g, n) => s"$g: ${n.size}" })
+      tables(ro).foreach { df =>
+        val cached = df.queryExecution.withCachedData.collectFirst {
+          case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+        }
+        assert(cached.contains(true), df.schema.simpleString)
+      }
+    } finally tables(ro).foreach(_.unpersist())
+  }
+
+  test("fork rethrows the first failure as thrown and leaves no thread running") {
+    val started = new ConcurrentLinkedQueue[Thread]
+    val planted = new IllegalStateException("planted")
+    val thrown = intercept[IllegalStateException] {
+      BlockScope.fork(spark, Seq(
+        () => { started.add(Thread.currentThread); throw planted },
+        () => { started.add(Thread.currentThread); Thread.sleep(300); 1 }))
+    }
+    assert(thrown eq planted)
+    assert(started.size == 2)
+    assert(started.asScala.forall(!_.isAlive))
+  }
+
+  test("materializeAll rethrows a failing table's own exception") {
+    val ok = spark.range(0, 10, 1, 2).toDF("id")
+    // a filter, so that a count cannot prune the failing expression
+    val failing = spark.range(0, 10, 1, 2).toDF("id")
+      .filter(raise_error(lit("planted failure")).isNull)
+    val expected = intercept[Exception](failing.count()).getClass
+    val ro = ReadonlyTables(ok, ok, ok, ok, ok, ok, failing, ok, ok, ok, ok)
+    try {
+      val thrown = intercept[Exception](ro.materializeAll())
+      assert(!thrown.isInstanceOf[ExecutionException])
+      assert(thrown.getClass == expected, thrown)
+      val alive = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+        .filter(_.startsWith("blockscope-fork"))
+      assert(alive.isEmpty, alive)
+    } finally tables(ro).foreach(_.unpersist())
   }
 }

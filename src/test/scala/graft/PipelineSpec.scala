@@ -220,4 +220,17 @@ class PipelineSpec extends AnyFunSuite {
       assert(b == i, s"$name differs with the boundaries inlined")
     }
   }
+
+  test("Pipeline.run's concurrent branches register their boundaries with the caller's scope") {
+    // (the inlined flag's hand-over is checked on BlockScope.fork itself:
+    // an inlined Pipeline.run re-plans the transitive closure's growing
+    // self-join every round and runs out of heap)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val rows = BlockScope.scoped(
+      Pipeline.run(spark, dump, types, Seq("reach"), Seq("signor")).sourceMeta.count())
+    assert(rows > 0)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"blocks left after the scope: ${left.values.map(_.name)}")
+  }
 }

@@ -466,15 +466,15 @@ class PlanSpec extends AnyFunSuite {
       s"z computation left codegen:\n$p")
   }
 
-  /** Lines of `src/main/scala` outside the file `owner` that match `pat`. */
-  private def sourceLinesOutside(owner: String,
-      pat: scala.util.matching.Regex): List[String] = {
+  /** Lines of `src/main/scala`, outside the files `owners`, that match `pat`. */
+  private def sourceLinesOutside(pat: scala.util.matching.Regex,
+      owners: String*): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"sources not found from ${root.toAbsolutePath}")
     java.nio.file.Files.walk(root).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") && !f.endsWith(owner))
+      .filter(f => f.toString.endsWith(".scala") && !owners.exists(f.endsWith))
       .flatMap { f =>
         java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
           case (line, i) if pat.findFirstIn(line).isDefined =>
@@ -487,8 +487,8 @@ class PlanSpec extends AnyFunSuite {
     // every materialization boundary goes through `ds.boundary()`, so the
     // scope, reliable-mode and inlined contracts reach all of them; a
     // direct call would silently opt out of all three
-    val offenders = sourceLinesOutside("core/BlockScope.scala",
-      """\.(localCheckpoint|checkpoint)\(""".r)
+    val offenders = sourceLinesOutside(
+      """\.(localCheckpoint|checkpoint)\(""".r, "core/BlockScope.scala")
     assert(offenders.isEmpty,
       "direct checkpoint calls outside core/BlockScope.scala (use " +
         "`.boundary()`):\n" + offenders.mkString("\n"))
@@ -497,11 +497,23 @@ class PlanSpec extends AnyFunSuite {
   test("QueryProfile is the only code that extends SparkListener") {
     // one listener, registered and removed per measurement, so harnesses
     // cannot drift apart on what they count or leak listeners
-    val offenders = sourceLinesOutside("core/QueryProfile.scala",
-      """(extends|new)\s+[\w.]*\bSparkListener\b""".r)
+    val offenders = sourceLinesOutside(
+      """(extends|new)\s+[\w.]*\bSparkListener\b""".r, "core/QueryProfile.scala")
     assert(offenders.isEmpty,
       "SparkListener subclasses outside core/QueryProfile.scala (use " +
         "`QueryProfile.measure`):\n" + offenders.mkString("\n"))
   }
 
+  test("only BlockScope and HttpApi start threads") {
+    // Spark local properties (job group, description) are per thread: a job
+    // launched from a pooled or borrowed thread carries whatever its last
+    // user set, so engine code forks through `BlockScope.fork`, which hands
+    // the caller's properties over; HttpApi owns the service's handler pool
+    val offenders = sourceLinesOutside(
+      """new\s+Thread\b|Executors\.|ExecutionContext|Future\b|ForkJoinPool|ThreadPoolExecutor""".r,
+      "core/BlockScope.scala", "service/HttpApi.scala")
+    assert(offenders.isEmpty,
+      "threads started outside core/BlockScope.scala and service/HttpApi.scala " +
+        "(use `BlockScope.fork`):\n" + offenders.mkString("\n"))
+  }
 }
