@@ -61,8 +61,10 @@ object Belief {
     * plus those of all statements refining it (more-specific ancestors in
     * the refinement DAG — calculate_belief, export_assembly.py:680-702).
     *
-    * `srcCounts`: (mk_hash, src_json); `closure`: (desc, anc) transitive
-    * pairs from [[Refinement.transitiveClosure]] where desc refines anc.
+    * `srcCounts`: (mk_hash, src_json); `closure`: any transitively closed
+    * set of (desc, anc) pairs where desc refines anc — the output of
+    * [[Refinement.transitiveClosure]], or [[Pipeline.refinementEdges]]'
+    * key-subset edges, which are closed as they come.
     */
   def scoreWithRefinements(
       srcCounts: DataFrame,

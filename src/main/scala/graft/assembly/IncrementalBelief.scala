@@ -61,25 +61,16 @@ import graft.core.BlockScope.Boundary
   * old-closure bridges alternating with new edges, with C?∘C? = C?
   * because the stored closure C is itself closed — so the one-segment
   * pairs C?∘E'∘C? seed from two endpoint-pruned joins against the stored
-  * pair tables, and path-doubling over segments converges in log rounds
-  * of batch-sized in-memory joins ([[Refinement.transitiveClosure]]'s
-  * shape, seeded at the delta instead of the whole graph).
+  * pair tables, and [[Refinement.transitiveClosure]] over those
+  * batch-sized segments closes the multi-new-edge paths. Its cycle check
+  * fails the batch before any closure pair is written.
   */
 object IncrementalBelief {
 
-  private val Shard = "shard"
-
-  import ShardedStore.{exists, refreshed, shardOf}
+  import ShardedStore.{Shard, exists, inShards, refreshed, shardOf, shardsOf}
 
   private def keyShard(stype: Column, key: Column, shards: Int): Column =
     pmod(xxhash64(stype, key), lit(shards)).cast("int")
-
-  private def shardsOf(df: DataFrame): Seq[Int] =
-    df.select(Shard).distinct().collect().map(_.getInt(0)).toSeq
-
-  /** Literal-list partition filter; an empty delta prunes everything. */
-  private def inShards(c: Column, ss: Seq[Int]): Column =
-    if (ss.isEmpty) lit(false) else c.isin(ss: _*)
 
   /** A closure pair table that may not exist yet: a crash between the
     * FIRST-ever c_by_anc append (which created that table) and the
@@ -92,15 +83,6 @@ object IncrementalBelief {
     if (exists(spark, db, name)) refreshed(spark, db, name)
     else spark.range(0).select(col("id").as("desc"), col("id").as("anc"),
       col("id").cast("int").as(Shard))
-
-  /** (mk_hash, stype, keys) from agent rows — the same sorted-set key
-    * derivation as [[Pipeline.refinementEdges]]. */
-  def keysets(stmts: DataFrame, agents: DataFrame): DataFrame =
-    stmts.select("mk_hash", "stype").join(
-      agents.groupBy("mk_hash").agg(
-        array_sort(collect_set(
-          concat(col("db_name"), lit(":"), col("db_id")))).as("keys")),
-      "mk_hash")
 
   /** Initialize the store from a base world (= the first upsert). */
   def init(
@@ -131,7 +113,7 @@ object IncrementalBelief {
     // delta keysets from the RAW batch (not the guarded remainder): edge
     // discovery and the affected set must re-derive on a replay whose
     // crash fell between the appends and the closure/agg writes
-    val deltaKs = keysets(stmts, agents)
+    val deltaKs = Refinement.keysets(stmts, agents)
       .withColumn(Shard, shardOf(col("mk_hash"), shards))
       .boundary()
     val countsLc = counts.select("mk_hash", "src", "cnt").boundary()
@@ -201,14 +183,11 @@ object IncrementalBelief {
       .filter(col("d_mk_hash") =!= col("u_mk_hash"))
       .select(col("d_mk_hash"), col("d_keys"), col("u_mk_hash"), col("u_keys"))
       .distinct()
-    def refines(aK: String, bK: String) =
-      size(col(aK)) > size(col(bK)) &&
-        size(array_except(col(bK), col(aK))) === 0
     val keyEdges = cands
-      .filter(refines("d_keys", "u_keys"))
+      .filter(Refinement.refines(col("d_keys"), col("u_keys")))
       .select(col("d_mk_hash").as("desc"), col("u_mk_hash").as("anc"))
       .unionByName(cands
-        .filter(refines("u_keys", "d_keys"))
+        .filter(Refinement.refines(col("u_keys"), col("d_keys")))
         .select(col("u_mk_hash").as("desc"), col("d_mk_hash").as("anc")))
     val edges = extraEdges
       .fold(keyEdges)(e => keyEdges.unionByName(e.select("desc", "anc")))
@@ -216,7 +195,6 @@ object IncrementalBelief {
       .boundary(eager = true)
 
     // --- closure extension: paths through ≥1 new edge --------------------
-    def fresh(df: DataFrame) = df.boundary(eager = true).toDF("desc", "anc")
     val haveClosure = exists(spark, db, "c_by_anc")
     val seg = if (!haveClosure) edges else {
       // one-segment pairs C?∘E'∘C?: extend each new edge left with stored
@@ -229,9 +207,10 @@ object IncrementalBelief {
         .join(eDesc.select(col("desc").as("e_desc")),
           col("anc") === col("e_desc"), "left_semi")
         .select("desc", "anc")
-      val extendedLeft = fresh(edges.unionByName(
+      val extendedLeft = edges.unionByName(
         left.as("c").join(edges.as("e"), col("c.anc") === col("e.desc"))
-          .select(col("c.desc").as("desc"), col("e.anc").as("anc"))))
+          .select(col("c.desc").as("desc"), col("e.anc").as("anc")))
+        .boundary(eager = true)
       val elAnc = extendedLeft.select(col("anc")).distinct()
         .withColumn(Shard, shardOf(col("anc"), shards))
       val cD = pairsOrEmpty(spark, db, "c_by_desc")
@@ -239,27 +218,13 @@ object IncrementalBelief {
         .join(elAnc.select(col("anc").as("l_anc")),
           col("desc") === col("l_anc"), "left_semi")
         .select("desc", "anc")
-      fresh(extendedLeft.unionByName(
+      extendedLeft.unionByName(
         extendedLeft.as("l").join(right.as("r"),
             col("l.anc") === col("r.desc"))
-          .select(col("l.desc").as("desc"), col("r.anc").as("anc"))))
+          .select(col("l.desc").as("desc"), col("r.anc").as("anc")))
     }
-    // path-doubling over delta segments (multi-new-edge paths)
-    var acc = fresh(seg.distinct())
-    var grown = true
-    var iter = 0
-    while (grown) {
-      if (iter > 20) sys.error("delta closure did not converge (cycle?)")
-      val next = fresh(acc.as("l")
-        .join(acc.as("r"), col("l.anc") === col("r.desc"))
-        .select(col("l.desc").as("desc"), col("r.anc").as("anc"))
-        .distinct()
-        .join(acc, Seq("desc", "anc"), "left_anti"))
-      grown = !next.isEmpty
-      if (grown) acc = fresh(acc.union(next))
-      iter += 1
-    }
-    val accSharded = acc
+    // multi-new-edge paths; fails on a cycle before any pair is written
+    val accSharded = Refinement.transitiveClosure(seg)
       .withColumn("anc_shard", shardOf(col("anc"), shards))
       .withColumn("desc_shard", shardOf(col("desc"), shards))
       .boundary()
@@ -272,8 +237,6 @@ object IncrementalBelief {
            .filter(inShards(col(Shard), pairShards("anc_shard")))
            .select("desc", "anc"),
          Seq("desc", "anc"), "left_anti")).boundary(eager = true)
-    if (deltaClosure.filter(col("desc") === col("anc")).limit(1).count() > 0)
-      sys.error("refinement graph would contain a cycle")
     ShardedStore.append(spark, db, "c_by_anc",
       deltaClosure.select(col("desc"), col("anc"),
         col("anc_shard").as(Shard)), Seq(Shard))

@@ -48,18 +48,10 @@ import graft.core.BlockScope.Boundary
   */
 object IncrementalOntologyEdges {
 
-  private val Shard = "shard"
-
-  import ShardedStore.{exists, refreshed}
+  import ShardedStore.{Shard, exists, inShards, refreshed, shardOf, shardsOf}
 
   private def sigShard(stype: Column, sig: Column, shards: Int): Column =
     pmod(xxhash64(stype, sig), lit(shards)).cast("int")
-
-  private def shardsOf(df: DataFrame): Seq[Int] =
-    df.select(Shard).distinct().collect().map(_.getInt(0)).toSeq
-
-  private def inShards(c: Column, ss: Seq[Int]): Column =
-    if (ss.isEmpty) lit(false) else c.isin(ss: _*)
 
   /** Append the batch's signatures and return its NEW refinement edges
     * (desc, anc). Inputs as [[Refinement.ontologyRefinementEdges]]:
@@ -111,7 +103,7 @@ object IncrementalOntologyEdges {
     val keys = agents
       .select("mk_hash", "ag_num", "db_name", "db_id")
       .join(stmts.select("mk_hash", "stype").distinct(), "mk_hash")
-      .withColumn(Shard, pmod(col("mk_hash"), lit(shards)).cast("int"))
+      .withColumn(Shard, shardOf(col("mk_hash"), shards))
     val newKeys =
       if (!exists(spark, db, "o_keys")) keys
       else keys.join(
@@ -184,7 +176,7 @@ object IncrementalOntologyEdges {
         concat(col("db_name"), lit(":"), col("db_id")) === col("key"),
         "left_semi")
       .select("mk_hash").distinct()
-      .withColumn(Shard, pmod(col("mk_hash"), lit(shards)).cast("int"))
+      .withColumn(Shard, shardOf(col("mk_hash"), shards))
       .boundary()
     if (affHashes.isEmpty) return none
     val rows = oKeys.filter(inShards(col(Shard), shardsOf(affHashes)))

@@ -54,15 +54,6 @@ object IncrementalReadonly {
 
   import ShardedStore.{exists, refreshed, shardOf}
 
-  private def append(
-      spark: SparkSession, db: String, name: String, df: DataFrame,
-      partCols: Seq[String]): Unit =
-    ShardedStore.append(spark, db, name, df, partCols)
-
-  private def overwriteShards(
-      spark: SparkSession, db: String, name: String, df: DataFrame): Unit =
-    ShardedStore.overwriteShards(spark, db, name, df, ShardCol)
-
   /** Initialize the store from a base world (= the first upsert). */
   def init(
       spark: SparkSession, world: StatementWorld, types: TypeRegistry,
@@ -121,16 +112,16 @@ object IncrementalReadonly {
     val dRefs = guarded(
       delta.refs.withColumn(ShardCol, shardOf(col("rid"), shards)),
       "p_refs", Seq("rid")).boundary()
-    append(spark, db, "p_statements", dStmts, Seq(ShardCol))
-    append(spark, db, "p_evidence", dEv, Seq(ShardCol))
-    append(spark, db, "p_mesh", dMesh, Seq(ShardCol))
-    append(spark, db, "p_refs", dRefs, Seq(ShardCol))
+    ShardedStore.append(spark, db, "p_statements", dStmts, Seq(ShardCol))
+    ShardedStore.append(spark, db, "p_evidence", dEv, Seq(ShardCol))
+    ShardedStore.append(spark, db, "p_mesh", dMesh, Seq(ShardCol))
+    ShardedStore.append(spark, db, "p_refs", dRefs, Seq(ShardCol))
     // agents: no natural row key (duplicate rows carry multiplicity), so
     // idempotency is per batch partition — a replayed batch is skipped
     // wholesale, a first delivery appends with multiplicity intact — or,
     // under agentsPerHash, first-wins per mk_hash (see the scaladoc)
     if (agentsPerHash)
-      append(spark, db, "p_agents",
+      ShardedStore.append(spark, db, "p_agents",
         guarded(delta.agents.withColumn("batch_id", lit(batchId))
           .withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
           "p_agents", Seq("mk_hash")).boundary(),
@@ -140,7 +131,7 @@ object IncrementalReadonly {
         !refreshed(spark, db, "p_agents")
           .filter(col("batch_id") === batchId).isEmpty
       if (!agentsSeen)
-        append(spark, db, "p_agents",
+        ShardedStore.append(spark, db, "p_agents",
           delta.agents.withColumn("batch_id", lit(batchId))
             .withColumn(ShardCol, shardOf(col("mk_hash"), shards)),
           Seq("batch_id", ShardCol))
@@ -163,7 +154,8 @@ object IncrementalReadonly {
           .join(upd.select("mk_hash", "new_belief"), Seq("mk_hash"), "left")
           .withColumn("belief", coalesce(col("new_belief"), col("belief")))
           .drop("new_belief")
-        overwriteShards(spark, db, "p_statements", merged.boundary(eager = true))
+        ShardedStore.overwriteShards(spark, db, "p_statements",
+          merged.boundary(eager = true), ShardCol)
       }
     }
 
@@ -211,7 +203,8 @@ object IncrementalReadonly {
           .filter(col(ShardCol).isin(touchedShards: _*))
           .join(touched.select("mk_hash"), Seq("mk_hash"), "left_anti")
           .unionByName(fresh)
-      overwriteShards(spark, db, name, merged.boundary(eager = true))
+      ShardedStore.overwriteShards(spark, db, name,
+        merged.boundary(eager = true), ShardCol)
     }
   }
 

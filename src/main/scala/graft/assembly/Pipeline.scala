@@ -61,17 +61,18 @@ object Pipeline {
     * three paths cover all pairs; the final distinct collapses overlap. No
     * candidates are dropped at any threshold — the threshold only picks
     * the join strategy per block.
+    *
+    * The output is transitively closed: keys(a) ⊃ keys(b) ⊃ keys(c) gives
+    * keys(a) ⊃ keys(c), and every such pair is emitted. It is also acyclic,
+    * since the anc side always has strictly fewer keys. So [[run]] scores
+    * belief over these edges directly and runs
+    * [[Refinement.transitiveClosure]] only when ontology edges join them.
     */
   def refinementEdges(
       uniq: DataFrame, agents: DataFrame,
       hotKeyThreshold: Int = 100000): DataFrame = {
-    val keySets = agents
-      .groupBy("mk_hash")
-      .agg(array_sort(collect_set(concat(col("db_name"), lit(":"), col("db_id"))))
-        .as("keys"))
-    val stmts = uniq.select(col("mk_hash"), col("stype"))
-      .join(keySets, "mk_hash")
-    val exploded = stmts.withColumn("block_key", explode(col("keys")))
+    val exploded = Refinement.keysets(uniq, agents)
+      .withColumn("block_key", explode(col("keys")))
     val dfs = exploded.groupBy("stype", "block_key")
       .agg(count(lit(1)).as("block_df"))
     // four consumers below (cold, hot pairs, hot singletons twice) — the
@@ -112,27 +113,20 @@ object Pipeline {
       .select(col("a_mk_hash"), col("a_keys"), col("b_mk_hash"), col("b_keys"))
 
     blocked.unionByName(singletonPairs)
-      .filter(size(col("a_keys")) > size(col("b_keys")) &&
-        size(array_except(col("b_keys"), col("a_keys"))) === 0)
+      .filter(Refinement.refines(col("a_keys"), col("b_keys")))
       .select(col("a_mk_hash").as("desc"), col("b_mk_hash").as("anc"))
       .distinct()
   }
 
-  private def checkpoint(df: DataFrame, dir: Option[String], name: String): DataFrame =
-    dir match {
-      case Some(d) =>
-        df.write.mode("overwrite").parquet(s"$d/$name")
-        df.sparkSession.read.parquet(s"$d/$name")
-      case None =>
-        // no artifact dir: still truncate the plan at the same boundary —
-        // downstream stages consume parsed/unique/agents subtrees many
-        // times each, and re-inlining the (wide-schema) parse per consumer
-        // makes analysis memory quadratic in pipeline depth. The lazy
-        // boundary replaces the logical plan with an RDD scan immediately;
-        // under AQE its creation also runs the subtree's shuffle-map
-        // stages, and only the final stage waits for the first use.
-        df.boundary()
-    }
+  /** Write `df` as the parquet artifact `dir/name` and read it back.
+    * Without an artifact dir, [[run]] cuts each of these frames with a
+    * boundary on its own line, so its RDD is named after that line; the
+    * boundary keeps every consumer from re-inlining the wide-schema parse
+    * (analysis memory would grow quadratic in pipeline depth). */
+  private def artifact(df: DataFrame, dir: String, name: String): DataFrame = {
+    df.write.mode("overwrite").parquet(s"$dir/$name")
+    df.sparkSession.read.parquet(s"$dir/$name")
+  }
 
   /** Run the full DAG; returns the queryable readonly layer. */
   def run(
@@ -157,40 +151,46 @@ object Pipeline {
     //    -> canonical key -> hash
     val (valid, rejected) = Preassembly.partitionValid(Preassembly.parse(raw))
     checkpointDir.foreach(d => Bookkeeping.recordRejected(rejected, d, runId))
-    val parsed = checkpoint(
-      valid.withColumn("stype", col("stmt.type")),
-      checkpointDir, "parsed")
+    val parsedRows = valid.withColumn("stype", col("stmt.type"))
+    val parsed = checkpointDir.fold(parsedRows.boundary())(
+      artifact(parsedRows, _, "parsed"))
 
     // 3-6 run as three concurrent branches (BlockScope.fork), each
     // creating its boundaries; the three are independent once parsed is
     // cut, and joined before belief:
-    //   - uniq -> agents -> refinement edges -> transitive closure;
+    //   - uniq -> agents -> refinement closure;
     //   - srcCounts;
     //   - evidence -> mesh.
     val ((uniq, agents, closure), srcCounts, (evidence, mesh)) =
       BlockScope.fork(spark)({
-        val uniq = checkpoint(
-          Preassembly.dedup(parsed).select("mk_hash", "raw_stmt_id", "stype", "stmt"),
-          checkpointDir, "unique_statements")
+        val uniqRows = Preassembly.dedup(parsed)
+          .select("mk_hash", "raw_stmt_id", "stype", "stmt")
+        val uniq = checkpointDir.fold(uniqRows.boundary())(
+          artifact(uniqRows, _, "unique_statements"))
 
         // 3. agents (pa_agents), from the kept payload of each unique statement
-        val agents = checkpoint(
-          Preassembly.agentRows(uniq), checkpointDir, "pa_agents")
+        val agentRows = Preassembly.agentRows(uniq)
+        val agents = checkpointDir.fold(agentRows.boundary())(
+          artifact(agentRows, _, "pa_agents"))
 
-        // 4. refinement DAG; with an ontology dimension the
-        //    isa/partof-generalized edges join the key-subset ones (the
-        //    reference's single Preassembler predicate covers both shapes,
-        //    export_assembly.py:739-745)
-        val edges = ontology match {
-          case Some(ont) => refinementEdges(uniq, agents)
-            .union(Refinement.ontologyRefinementEdges(
-              uniq.select("mk_hash", "stype"), agents, ont))
-            .distinct()
-          case None => refinementEdges(uniq, agents)
+        // 4. refinement closure. The key-subset edges are closed already
+        //    (refinementEdges); an ontology dimension adds the
+        //    isa/partof-generalized edges (the reference's single
+        //    Preassembler predicate covers both shapes,
+        //    export_assembly.py:739-745), whose mix composes into new
+        //    multi-hop paths, so only then does the closure loop run
+        val closure = ontology match {
+          case Some(ont) => Refinement.transitiveClosure(
+            refinementEdges(uniq, agents)
+              .union(Refinement.ontologyRefinementEdges(
+                uniq.select("mk_hash", "stype"), agents, ont)))
+          case None => refinementEdges(uniq, agents).boundary(eager = true)
         }
-        (uniq, agents, Refinement.transitiveClosure(edges))
+        (uniq, agents, closure)
+      }, {
+        val counts = Preassembly.sourceCounts(parsed)
+        checkpointDir.fold(counts.boundary())(artifact(counts, _, "source_counts"))
       },
-      checkpoint(Preassembly.sourceCounts(parsed), checkpointDir, "source_counts"),
       {
         // 5. evidence rows with paper links: rid -> trid -> pmid
         val readingRefs = dump.readings.select("rid", "trid")

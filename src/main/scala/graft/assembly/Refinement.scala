@@ -13,11 +13,35 @@ import graft.core.BlockScope.Boundary
   *   - candidate generation is a blocked self-join: equality on the
   *     statement type plus a coarse agent-grounding block, so the quadratic
   *     work is confined to same-block groups (SURVEY §7.4.1);
-  *   - transitive ancestors come from an iterative frontier join to
-  *     fixpoint — the DAG is shallow, so the loop runs few rounds, each a
-  *     single equi-join shuffled on the frontier key.
+  *   - the ontology-free predicate ("refines" = same type, strictly more
+  *     agent keys, a superset of the other's) is [[refines]] over the
+  *     sorted key sets of [[keysets]]; the batch edge build
+  *     ([[Pipeline.refinementEdges]]) and the delta build
+  *     ([[IncrementalBelief.upsert]]) both apply it;
+  *   - transitive ancestors come from one path-doubling loop,
+  *     [[transitiveClosure]], the engine's only closure loop. The key-subset
+  *     relation is closed already (keys(a) ⊃ keys(b) ⊃ keys(c) implies
+  *     keys(a) ⊃ keys(c)), so the loop is needed only where other
+  *     predicates add edges: ontology walks, the ontology itself, and the
+  *     delta segments of the incremental store.
   */
 object Refinement {
+
+  /** (mk_hash, stype, keys): each statement's agent keys ("NS:ID") as a
+    * sorted set. Statements without agent rows drop out. */
+  def keysets(stmts: DataFrame, agents: DataFrame): DataFrame =
+    stmts.select("mk_hash", "stype").join(
+      agents.groupBy("mk_hash").agg(
+        array_sort(collect_set(
+          concat(col("db_name"), lit(":"), col("db_id")))).as("keys")),
+      "mk_hash")
+
+  /** The key-subset refinement predicate on two key-set columns: the desc
+    * side has strictly more keys and every anc key among them. Same-type
+    * pairing is the caller's join. */
+  def refines(descKeys: Column, ancKeys: Column): Column =
+    size(descKeys) > size(ancKeys) &&
+      size(array_except(ancKeys, descKeys)) === 0
 
   /** Candidate refinement pairs: same `blockCols` values, different hashes.
     * The caller applies the domain refinement predicate to the paired rows.
@@ -279,22 +303,25 @@ object Refinement {
     sys.error(s"connected components did not converge in $maxIter rounds")
   }
 
+  private val MaxClosureRounds = 20
+
   /** Transitive closure of a DAG given as (desc, anc) direct edges.
     * Returns all (desc, anc) pairs with a path desc -> anc. Fails on cycles
     * (mirrors the reference's cycle check, export_assembly.py:858-877).
     *
     * Path doubling: each round self-joins the accumulated closure, so a
     * depth-D DAG converges in ceil(log2 D) rounds — each one equi-join
-    * shuffle — instead of D frontier rounds.
+    * shuffle — instead of D frontier rounds; 20 rounds cover any depth up
+    * to 2^20.
     */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def transitiveClosure(edges: DataFrame): DataFrame = {
     // boundary (not cache): iterative plans must truncate lineage or
     // Catalyst re-analyzes an exponentially growing logical plan each round.
     def fresh(df: DataFrame): DataFrame =
       df.boundary(eager = true).toDF("desc", "anc") // new attr ids for self-joins
     var acc = fresh(edges.select(col("desc"), col("anc")).distinct())
     var i = 0
-    while (i < maxIter) {
+    while (i < MaxClosureRounds) {
       val next = fresh(acc.as("l")
         .join(acc.as("r"), col("l.anc") === col("r.desc"))
         .select(col("l.desc").as("desc"), col("r.anc").as("anc"))
@@ -308,6 +335,6 @@ object Refinement {
       acc = fresh(acc.union(next))
       i += 1
     }
-    sys.error(s"transitive closure did not converge in $maxIter rounds (cycle?)")
+    sys.error(s"transitive closure did not converge in $MaxClosureRounds rounds (cycle?)")
   }
 }

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Catalog-table plumbing shared by the incremental stores
-  * ([[IncrementalReadonly]], [[IncrementalBelief]]): hash-shard partition
-  * columns, guarded appends, and dynamic-partition-overwrite upserts.
+  * ([[IncrementalReadonly]], [[IncrementalBelief]],
+  * [[IncrementalOntologyEdges]]): hash-shard partition columns and
+  * shard-list pruning, guarded appends, and dynamic-partition-overwrite
+  * upserts.
   *
   * Every table in these stores is partitioned by a `pmod(key, shards)`
   * shard column so that delta maintenance touches only the partitions a
@@ -14,8 +16,20 @@ import org.apache.spark.sql.functions._
   */
 private[assembly] object ShardedStore {
 
+  /** The shard column of [[IncrementalBelief]]'s and
+    * [[IncrementalOntologyEdges]]' tables. */
+  val Shard = "shard"
+
   def shardOf(c: Column, shards: Int): Column =
     pmod(c, lit(shards)).cast("int")
+
+  /** The distinct [[Shard]] values of `df` (collected to the driver). */
+  def shardsOf(df: DataFrame): Seq[Int] =
+    df.select(Shard).distinct().collect().map(_.getInt(0)).toSeq
+
+  /** Literal-list partition filter; an empty delta prunes everything. */
+  def inShards(c: Column, ss: Seq[Int]): Column =
+    if (ss.isEmpty) lit(false) else c.isin(ss: _*)
 
   private def checkpoint(db: String, name: String): Unit =
     StoreFaults.onWrite(s"$db.$name")

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.assembly.{Belief, Distill, Preassembly, Refinement}
+import graft.assembly.{Belief, Distill, Pipeline, Preassembly, Refinement}
 import graft.core.StatementModel
 import graft.sources.Tables
 
@@ -252,6 +253,52 @@ class AssemblySpec extends AnyFunSuite {
     assert(naive.contains((1L, 100L))) // hot-singleton path
     assert(naive.contains((2L, 100L)))
     assert(naive.exists { case (d, _) => d % 2 == 0 }) // pair-block path
+  }
+
+  test("key-subset edges are exactly the strict-subset relation, and closed") {
+    import spark.implicits._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // skewed alphabet: A and B sit in most statements (hot blocks at a low
+    // threshold), C-F in few (cold blocks)
+    val key = Gen.frequency(6 -> "A", 4 -> "B", 1 -> "C", 1 -> "D", 1 -> "E", 1 -> "F")
+    val stmt = for {
+      stype <- Gen.oneOf("t1", "t2")
+      n <- Gen.choose(1, 4)
+      keys <- Gen.containerOfN[Set, String](n, key)
+    } yield (stype, keys)
+    val threshold = 3
+    val paths = Seq(1L, 2L, 3L).map { seed =>
+      val world = Gen.listOfN(40, stmt).pureApply(Gen.Parameters.default, Seed(seed))
+        .zipWithIndex.map { case ((t, ks), i) => (i.toLong + 1, t, ks) }
+      val uniq = world.map { case (h, t, _) => (h, t) }.toDF("mk_hash", "stype")
+      val agents = world.flatMap { case (h, _, ks) => ks.map(k => (h, "NAME", k)) }
+        .toDF("mk_hash", "db_name", "db_id")
+      val brute = (for {
+        (d, td, kd) <- world; (a, ta, ka) <- world
+        if td == ta && ka.size < kd.size && ka.subsetOf(kd)
+      } yield (d, a)).toSet
+      def edgeSet(df: DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      Seq(Int.MaxValue, threshold, 1).foreach { t =>
+        assert(edgeSet(Pipeline.refinementEdges(uniq, agents, t)) == brute,
+          s"seed $seed threshold $t")
+      }
+      assert(edgeSet(Refinement.transitiveClosure(
+        Pipeline.refinementEdges(uniq, agents))) == brute, s"seed $seed closure")
+      // which blocking path can find each edge at `threshold`: an anc with
+      // a cold key (cold blocks), with >= 2 keys all hot (hot-pair blocks),
+      // with its only key hot (hot-singleton join)
+      val df = world.flatMap { case (_, t, ks) => ks.map(t -> _) }
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+      val byHash = world.map { case (h, t, ks) => h -> (t, ks) }.toMap
+      brute.map { case (_, a) =>
+        val (t, ks) = byHash(a)
+        val hot = ks.filter(k => df(t -> k) > threshold)
+        if (hot.size < ks.size) "cold" else if (ks.size == 1) "hot-singleton" else "hot-pair"
+      }
+    }.reduce(_ ++ _)
+    assert(paths == Set("cold", "hot-pair", "hot-singleton"), s"paths fired: $paths")
   }
 
   test("ontology refinement: isa edge yields pair key-subset cannot see") {

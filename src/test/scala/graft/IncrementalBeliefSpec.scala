@@ -208,6 +208,29 @@ class IncrementalBeliefSpec extends AnyFunSuite {
     assert(pairs("c_by_desc") == pairs("c_by_anc"))
   }
 
+  test("an extra edge that closes a cycle fails the batch before any closure pair lands") {
+    import spark.implicits._
+    val db = "graft_ib_spec6"
+    IncrementalBelief.reset(spark, db)
+    val s = Seq(10L -> "t", 20L -> "t", 30L -> "t")
+    val a = Seq(10L -> Seq("XA"), 20L -> Seq("XB"), 30L -> Seq("XC"))
+    val c = Seq((10L, "reach", 1L), (20L, "reach", 1L), (30L, "reach", 1L))
+    IncrementalBelief.init(spark, stmtsDf(s), agentsDf(a), countsDf(c),
+      db, shards = 4)
+    def upsert(batchId: Long, edges: (Long, Long)*) =
+      IncrementalBelief.upsert(spark, emptyStmts, emptyAgents,
+        countsDf(Seq.empty), db, shards = 4, batchId = batchId,
+        extraEdges = Some(edges.toDF("desc", "anc")))
+    upsert(1L, 10L -> 20L, 20L -> 30L)
+    val stored = storeClosure(db)
+    assert(stored == Set((10L, 20L), (20L, 30L), (10L, 30L)))
+    // 30 -> 10 closes 10 -> 20 -> 30 -> 10 through the stored pairs
+    val e = intercept[RuntimeException](upsert(2L, 30L -> 10L))
+    assert(e.getMessage.contains("cycle"), e.getMessage)
+    assert(storeClosure(db) == stored)
+    assert(spark.table(s"$db.c_by_desc").count() == stored.size)
+  }
+
   test("extra edges compose with stored closure across batches") {
     import spark.implicits._
     val db = "graft_ib_spec3"

@@ -144,17 +144,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(edges == Set((1L, 2L)), s"got $edges")
   }
 
-  test("belief with refinement: planted subset chain accumulates evidence") {
+  /** [[dump]] plus an Inhibition key-subset chain: the 3-agent statement
+    * (HGNC:7, 8, 9) refines the 2-agent one (HGNC:7, 8), and `more` rows
+    * ride along. */
+  def chainDump(more: (Long, String)*): PrincipalDump = {
     import spark.implicits._
+    val extra = (Seq(
+      7L -> """{"type":"Inhibition","subj":{"name":"X","db_refs":{"HGNC":"7"}},"obj":{"name":"Y","db_refs":{"HGNC":"8"}}}""",
+      8L -> """{"type":"Inhibition","members":[{"name":"X","db_refs":{"HGNC":"7"}},{"name":"Y","db_refs":{"HGNC":"8"}},{"name":"Z","db_refs":{"HGNC":"9"}}]}""",
+    ) ++ more).map { case (sid, json) => (sid, Some(21L), None: Option[Long], "reach", json) }
+      .toDF("raw_stmt_id", "reading_id", "db_info_id", "src", "raw_json")
+    val d = dump
+    d.copy(rawStatements = d.rawStatements.unionByName(extra))
+  }
+
+  test("belief with refinement: planted subset chain accumulates evidence") {
     // direct unit check of the pipeline's refinement edge builder through
     // run(): add a third Activation whose agent keys are a strict subset
-    val extra = Seq(
-      (7L, Some(21L), None: Option[Long], "reach",
-        """{"type":"Inhibition","subj":{"name":"X","db_refs":{"HGNC":"7"}},"obj":{"name":"Y","db_refs":{"HGNC":"8"}}}"""),
-      (8L, Some(21L), None: Option[Long], "reach",
-        """{"type":"Inhibition","members":[{"name":"X","db_refs":{"HGNC":"7"}},{"name":"Y","db_refs":{"HGNC":"8"}},{"name":"Z","db_refs":{"HGNC":"9"}}]}"""),
-    ).toDF("raw_stmt_id", "reading_id", "db_info_id", "src", "raw_json")
-    val d2 = dump.copy(rawStatements = dump.rawStatements.unionByName(extra))
+    val d2 = chainDump()
     // run once with local and once with reliable boundaries: every table
     // of the readonly layer must come out row-for-row the same (the scope
     // releases each run's blocks and checkpoint files once collected)
@@ -221,16 +228,44 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an isa edge lifts a general statement through a key-subset refiner") {
+    import spark.implicits._
+    // G = Inhibition(FPLX:XF, FPLX:YF) shares no key with the chain, but
+    // HGNC:7 isa XF and HGNC:8 isa YF make the 2-agent Inhibition refine
+    // it. The 3-agent one reaches G only through the closure (its three
+    // positions give no direct ontology edge), so G sums all three.
+    val d3 = chainDump(9L ->
+      """{"type":"Inhibition","subj":{"name":"XF","db_refs":{"FPLX":"XF"}},"obj":{"name":"YF","db_refs":{"FPLX":"YF"}}}""")
+    val ontology = Seq(("HGNC:7", "FPLX:XF"), ("HGNC:8", "FPLX:YF")).toDF("desc", "anc")
+    def beliefs(ont: Option[DataFrame]): Seq[Double] =
+      Pipeline.run(spark, d3, types, Seq("reach"), Seq("signor"), ontology = ont)
+        .sourceMeta.filter(col("type_num") === types.num("Inhibition"))
+        .select("belief").collect().map(_.getDouble(0)).sorted.toSeq
+    def near(a: Seq[Double], b: Seq[Double]) =
+      a.size == b.size && a.zip(b).forall { case (x, y) => math.abs(x - y) < 1e-9 }
+    // one reach evidence each: 1, 2 and 3 evidences give 0.65, 0.86, 0.923
+    val without = beliefs(None)
+    assert(near(without, Seq(0.65, 0.65, 0.86)), s"got $without")
+    val withIsa = beliefs(Some(ontology))
+    assert(near(withIsa, Seq(0.65, 0.86, 0.923)), s"got $withIsa")
+  }
+
   test("Pipeline.run's concurrent branches register their boundaries with the caller's scope") {
     // (the inlined flag's hand-over is checked on BlockScope.fork itself:
-    // an inlined Pipeline.run re-plans the transitive closure's growing
-    // self-join every round and runs out of heap)
+    // with every boundary inlined, optimizing the first readonly table's
+    // composed plan, which repeats the wide parsed `stmt` struct once per
+    // consumer, runs out of an 8 GB heap)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val rows = BlockScope.scoped(
-      Pipeline.run(spark, dump, types, Seq("reach"), Seq("signor")).sourceMeta.count())
+    def created = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val (rows, names) = BlockScope.scoped {
+      val n = Pipeline.run(spark, dump, types, Seq("reach"), Seq("signor")).sourceMeta.count()
+      (n, created.values.map(_.name).filter(_.startsWith("Pipeline.scala:")).toSeq)
+    }
     assert(rows > 0)
-    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    assert(left.isEmpty, s"blocks left after the scope: ${left.values.map(_.name)}")
+    // parsed, uniq, agents, srcCounts, the refinement blocks, the closure,
+    // evidence and mesh: each boundary is named after its own line
+    assert(names.size == 8 && names.distinct.size == 8, s"boundary names: $names")
+    assert(created.isEmpty, s"blocks left after the scope: ${created.values.map(_.name)}")
   }
 }
