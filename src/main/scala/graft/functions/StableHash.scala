@@ -23,6 +23,16 @@ object HashUtil {
     }
     acc
   }
+
+  /** [[graft.operators.TextAnalysis.mix32]] on one value: the 32-bit
+    * xorshift-multiply finalizer over a non-negative hash below 2^32. */
+  def mix32(h: Long): Long = {
+    var z = h
+    z ^= z >>> 16; z = (z * 73244475L) % 4294967296L
+    z ^= z >>> 16; z = (z * 73244475L) % 4294967296L
+    z ^ (z >>> 16)
+  }
+
   // MessageDigest.getInstance does a provider lookup + fresh instance per
   // call; this hash runs once per raw statement row, so keep one MD5 per
   // task thread (digest() leaves the instance reset for the next row)

@@ -98,16 +98,11 @@ object MinHashKernel {
 }
 
 object RotateKernel {
-  /** Deterministic ±1 sign for dimension j — the 32-bit xorshift-multiply
-    * finalizer's low bit (same mixer family as TextAnalysis.mix32, small
-    * constant, no 64-bit overflow anywhere the oracle can't follow). */
-  def sign(j: Int): Double = {
-    var z = j.toLong
-    z ^= z >>> 16; z = (z * 73244475L) % 4294967296L
-    z ^= z >>> 16; z = (z * 73244475L) % 4294967296L
-    z ^= z >>> 16
-    if ((z & 1L) == 0L) 1.0 else -1.0
-  }
+  /** Deterministic ±1 sign for dimension j — the low bit of
+    * [[HashUtil.mix32]] (small constant, no 64-bit overflow anywhere the
+    * oracle can't follow). */
+  def sign(j: Int): Double =
+    if ((HashUtil.mix32(j.toLong) & 1L) == 0L) 1.0 else -1.0
 
   /** The sign diagonal for a given dim — the oracle inlines this as a SQL
     * literal so both engines flip the same coordinates. */
@@ -162,6 +157,57 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     defineCodeGen(ctx, ev,
       c => s"graft.functions.MinHashKernel.sig($c, $k)")
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+object SimHashKernel {
+  /** 32-bit SimHash of a token array in one pass: each token's poly_hash,
+    * spread by [[HashUtil.mix32]], votes on every bit, and bit b is set where
+    * 2 × (tokens with bit b set) > token count (ties clear the bit).
+    * Value-identical to Dedup.simhash over the same tokens exploded one per
+    * row: a null token counts toward the total and sets no bit, and an
+    * empty array has no fingerprint (null), as a document without token
+    * rows has no group. */
+  def sig(toks: ArrayData): java.lang.Long = {
+    val n = toks.numElements()
+    if (n == 0) return null
+    val set = new Array[Int](32)
+    var j = 0
+    while (j < n) {
+      if (!toks.isNullAt(j)) {
+        val h = HashUtil.mix32(HashUtil.polyHash(toks.getUTF8String(j)))
+        var b = 0
+        while (b < 32) {
+          set(b) += ((h >>> b) & 1L).toInt
+          b += 1
+        }
+      }
+      j += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < 32) {
+      if (set(b).toLong * 2 > n) out |= 1L << b
+      b += 1
+    }
+    out
+  }
+}
+
+case class SimHashSig(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def nullSafeEval(v: Any): Any =
+    SimHashKernel.sig(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val tmp = ctx.freshName("simhash")
+      s"""
+      java.lang.Long $tmp = graft.functions.SimHashKernel.sig($c);
+      ${ev.isNull} = $tmp == null;
+      ${ev.value} = ${ev.isNull} ? -1L : $tmp.longValue();"""
+    })
+  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
     copy(child = newChild)
 }
 
@@ -283,6 +329,9 @@ object vectors {
 
   def minhash_sig(hashes: Column, k: Int): Column =
     GraftBridge.column(MinHashSig(GraftBridge.expression(hashes), k))
+
+  def simhash_sig(tokens: Column): Column =
+    GraftBridge.column(SimHashSig(GraftBridge.expression(tokens)))
 
   def word_shingles(text: Column, n: Int): Column =
     GraftBridge.column(WordShingles(GraftBridge.expression(text), n))

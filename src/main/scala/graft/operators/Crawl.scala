@@ -295,7 +295,11 @@ object Crawl {
     *   9. decontamination: benchmark shingle-overlap anti-join
     *      ([[Curate.contaminated]]);
     *  10. leakage-safe split: split hash over each doc's duplicate-
-    *      cluster root ([[Curate.leakageSafeSplit]]);
+    *      cluster root. Every survivor of step 8 is the min id of its
+    *      cluster or in no pair, so its root is its own id and the split
+    *      is [[Curate.hashSplit]] — the same column
+    *      [[Curate.leakageSafeSplit]] gives, without a second
+    *      connected-components run;
     *  11. packing: shard-parallel contiguous-fill sequence assignment
     *      ([[Curate.packSequences]]).
     *
@@ -342,15 +346,13 @@ object Crawl {
     val s404 = Curate.soft404Flags(main, idCol, "domain", "title", "main",
         minMainLen, minCluster)
       .where(!col("soft404"))
-    // `kept` fans out to four consumers (minhash pairs, the two
-    // connected-components runs, contamination, the final pack join) and
-    // every consumer would otherwise re-execute the ENTIRE upstream chain
+    // `kept` fans out to the minhash pairs and to dedupCorpus (whose
+    // survivors feed the contamination check and the pack), and every
+    // consumer would otherwise re-execute the ENTIRE upstream chain
     // — WARC/HTTP ingest, main-content extraction, soft-404, quality —
-    // because nothing before this point is a materialization boundary
-    // (114 Exchanges in the un-checkpointed plan, the ingest scan
-    // replayed per consumer). One lazy local checkpoint of the
-    // four narrow survivor columns truncates the plan (guide §3.3);
-    // ingest runs once.
+    // because nothing before this point is a materialization boundary.
+    // One lazy local checkpoint of the four narrow survivor columns
+    // truncates the plan (guide §3.3); ingest runs once.
     val kept = TextAnalysis.qualityStats(s404, "main", stopwords)
       .withColumn("lang_pred", TextAnalysis.langId(col("main"), stopwords))
       .where(col("n_tokens") >= minTokens &&
@@ -358,25 +360,19 @@ object Crawl {
       .select(col(idCol), col("url"), col("main"),
         col("n_tokens").cast("long").as("n_tokens"))
       .boundary()
-    // pairs feeds dedupCorpus AND leakageSafeSplit (two CC runs, each
-    // eagerly materializing its edge set) — checkpoint the tiny pair list
     val pairs = Dedup.minhashNearDups(kept.select(idCol, "main"), idCol,
       "main", n = n, k = k, r = r, threshold = dedupThreshold)
-      .boundary()
     val deduped = Dedup.dedupCorpus(kept, idCol, pairs)
     // survivors minus benchmark-contaminated, narrowed to the pack
-    // columns: consumed by the split input and the pack join
+    // columns; each survivor is its own cluster root (step 10)
     val clean = deduped.join(
       Curate.contaminated(deduped.select(idCol, "main"),
         bench.select(col(idCol), col("text").as("main")), idCol,
         "main", n = n, minFrac = contamFrac).select(col("doc_id").as(idCol)),
       Seq(idCol), "left_anti")
       .select(col(idCol), col("url"), col("n_tokens"))
-      .boundary()
-    val split = Curate.leakageSafeSplit(clean.select(col(idCol)), idCol,
-      pairs)
     Curate.packSequences(
-        clean.join(split.select(col(idCol), col("split")), Seq(idCol))
+        Curate.hashSplit(clean, idCol)
           .select(col(idCol), col("url"), col("split"), col("n_tokens")),
         idCol, "n_tokens", packBudget, packShards)
       .select(col(idCol), col("url"), col("split"), col("n_tokens"),

@@ -584,9 +584,11 @@ object Curate {
       .withColumn("lang_pred",
         TextAnalysis.langId(col(textCol), stopwords))
     // materialization boundaries at the two fan-out points (same
-    // rationale as Crawl.crawlPipeline): `kept` feeds the pair generator,
-    // both connected-components runs and the contamination check — an
-    // un-checkpointed plan re-runs the quality/lang-id scan per consumer
+    // rationale as Crawl.crawlPipeline): `kept` feeds the pair generator
+    // and dedupCorpus (whose survivors feed the contamination check) — an
+    // un-checkpointed plan re-runs the quality/lang-id scan per consumer;
+    // `pairs` is read twice by dedupCorpus's one connected-components run
+    // (once per edge direction)
     val kept = stats
       .filter(col("n_tokens") >= minTokens &&
         col("lang_pred") === lang && col("ttr") >= minTtr)
@@ -866,42 +868,42 @@ object Curate {
     *     flagged — stubs are a quality-funnel concern, not a crawl
     *     error.
     *
-    * Scale shape: one token-explode + doc-keyed aggregation for the
-    * SimHash (map-side partial agg), one (domain, simhash) count
-    * aggregation, one join back on that same key — no self-join, no
-    * all-pairs anything; the flags themselves are row-local. Output:
-    * every input column plus the four flags. */
+    * The body SimHash is [[graft.functions.SimHashSig]] over the tokens of
+    * every row carrying the page's id, so rows that share an id share one
+    * fingerprint (the fingerprint of their pooled tokens, as
+    * [[Dedup.simhash]] over their token rows gives). A null id gets no
+    * fingerprint and a null domain no cluster, so neither is ever a
+    * `template_dup`.
+    *
+    * Scale shape: two windows and no join — the token arrays pooled per
+    * id (one exchange on the id, rows never exploded per token), then the
+    * cluster size as a count per (domain, simhash) (one exchange on that
+    * key); no self-join, no all-pairs anything; the flags themselves are
+    * row-local. Output: every input column, in input order, plus the
+    * four flags. */
   def soft404Flags(
       df: DataFrame, idCol: String, domainCol: String, titleCol: String,
       textCol: String, minMainLen: Int = 200,
       minCluster: Long = 3): DataFrame = {
-    // the input feeds the fingerprint pass AND the flag join, and the
-    // fingerprinted rows feed the cluster count AND the final join —
-    // without boundaries the caller's upstream (in the crawl pipeline:
-    // the whole WARC/HTTP ingest + main-content chain) re-executes per
-    // consumer (guide §3.3).
-    val dfm = df.boundary()
     // null text tokenizes as "" (one empty token), so a failed
     // dechunk/decompress layer — exactly the prime soft-404 candidate —
-    // still gets a fingerprint row: every input row must come back with
-    // flags, and same-domain null/empty bodies cluster together (many
-    // decode-failed pages on one host ARE a template signal)
-    val toks = dfm.select(col(idCol).as("doc_id"),
-      explode(TextAnalysis.tokens(coalesce(col(textCol), lit("")))).as("tok"))
-    val sh = Dedup.simhash(toks)
-      .withColumnRenamed("doc_id", idCol).boundary()
-    // left joins as the second line of defense: a doc the fingerprint
-    // pass somehow missed still surfaces, with template_dup = false
-    val keyed = dfm.join(sh, Seq(idCol), "left")
-    val clusters = keyed.where(col("simhash").isNotNull)
-      .groupBy(col(domainCol), col("simhash"))
-      .agg(count(lit(1)).as("cluster_n"))
+    // still gets a fingerprint: every input row comes back with flags,
+    // and same-domain null/empty bodies cluster together (many
+    // decode-failed pages on one host ARE a template signal). Each window
+    // reads its input once, so no boundary guards the caller's upstream.
+    val toks = TextAnalysis.tokens(coalesce(col(textCol), lit("")))
+    val simhash = graft.functions.vectors.simhash_sig(
+      flatten(collect_list(toks).over(Window.partitionBy(col(idCol)))))
+    val clusterN = count(lit(1)).over(
+      Window.partitionBy(col(domainCol), col("simhash")))
     val lead = lower(concat(coalesce(col(titleCol), lit("")), lit(" "),
       substring(coalesce(col(textCol), lit("")), 1, Soft404LeadChars)))
     val phraseHit = Soft404Phrases
       .map(p => instr(lead, p) > 0)
       .reduce(_ || _)
-    keyed.join(clusters, Seq(domainCol, "simhash"), "left")
+    df.withColumn("simhash", when(col(idCol).isNotNull, simhash))
+      .withColumn("cluster_n",
+        when(col(domainCol).isNotNull && col("simhash").isNotNull, clusterN))
       .withColumn("phrase_hit", phraseHit)
       .withColumn("near_empty",
         length(coalesce(col(textCol), lit(""))) < minMainLen)

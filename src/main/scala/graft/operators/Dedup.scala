@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.BlockScope.Boundary
 
@@ -105,6 +105,13 @@ object Dedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
 
+  /** The signature of one band: its minhashes, in index order, as
+    * decimal strings joined by ",". [[bandSignatures]] and the per-document
+    * path of [[minhashNearDups]] both key buckets with it, so a persisted
+    * index and a batch run put a document in the same buckets. */
+  private def bandKey(minhs: Column): Column =
+    array_join(transform(minhs, _.cast("string")), ",")
+
   /** Banded LSH signatures — (doc_id, band, sig) rows. This is the
     * PERSISTABLE index of the incremental path ([[deltaNearDups]]): write
     * it once per corpus (bucketed by (band, sig)) and probe it with each
@@ -113,25 +120,33 @@ object Dedup {
     minhashes
       .withColumn("band", (col("i") / r).cast("int"))
       .groupBy("doc_id", "band")
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("i"), col("minh")))),
-          s => s.getField("minh").cast("string")),
-        ",").as("sig"))
+      .agg(bandKey(transform(
+        array_sort(collect_list(struct(col("i"), col("minh")))),
+        _.getField("minh"))).as("sig"))
+
+  /** The band self-join of every MinHash LSH path: distinct (a_id, b_id),
+    * a_id < b_id, of documents sharing a (band, sig) bucket of `sigs`
+    * after buckets over `maxBucket` members are dropped ([[capBucketDf]]).
+    * `pair` narrows the pairs further over the `x` / `y` sides.
+    * Plan-transparent: both sides read the same capped subtree, so its
+    * exchanges are planned once and reused. */
+  private def bandPairs(
+      sigs: DataFrame, maxBucket: Long, pair: Column = lit(true)): DataFrame = {
+    val capped = capBucketDf(sigs, Seq("band", "sig"), maxBucket)
+    capped.as("x").join(capped.as("y"),
+        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
+          col("x.doc_id") < col("y.doc_id") && pair)
+      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+      .distinct()
+  }
 
   /** LSH banding: signatures grouped into bands of `r` rows; docs sharing a
     * band signature are candidates. Output: distinct (a_id, b_id), a < b.
     * Buckets larger than `maxBucket` are dropped before the self-join
     * (hot-bucket cap; see [[capBucketDf]]). */
-  def lshCandidates(minhashes: DataFrame, r: Int, maxBucket: Long = 1000): DataFrame = {
-    // both self-join sides read the capped signatures: materialize once
-    val sigs = capBucketDf(bandSignatures(minhashes, r),
-      Seq("band", "sig"), maxBucket).boundary()
-    sigs.as("x").join(sigs.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
-  }
+  def lshCandidates(minhashes: DataFrame, r: Int, maxBucket: Long = 1000): DataFrame =
+    // the cap and both self-join sides read the signatures: materialize once
+    bandPairs(bandSignatures(minhashes, r).boundary(), maxBucket)
 
   /** Drop shingles whose document frequency exceeds `maxDf` before
     * inverted-index candidate generation — the standard stop-shingle cap:
@@ -143,6 +158,11 @@ object Dedup {
     * by |shingles|/maxDf, so it broadcasts. */
   def capShingleDf(shingles: DataFrame, maxDf: Long): DataFrame =
     capBucketDf(shingles, Seq("sh_hash"), maxDf)
+
+  /** |A ∩ B| / |A ∪ B| from the `inter`, `sz_a` and `sz_b` columns. */
+  private val jaccardOf: Column =
+    col("inter").cast("double") /
+      (col("sz_a") + col("sz_b") - col("inter")).cast("double")
 
   /** n-gram Jaccard near-dup pairs: candidates from the df-capped inverted
     * index (docs sharing at least one sub-cap shingle), with EXACT Jaccard
@@ -194,19 +214,19 @@ object Dedup {
         col("inter_sub") + coalesce(col("inter_hot"), lit(0L)))
       .join(sizes.select(col("doc_id").as("a_id"), col("sz").as("sz_a")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("sz").as("sz_b")), "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccardOf)
       .filter(col("inter") >= minIntersect && col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
   }
 
-  /** Exact Jaccard over shingle sets for given candidate pairs.
-    * |A ∩ B| via co-occurrence join; |A ∪ B| = |A| + |B| - |A ∩ B|.
-    * The shingle input feeds THREE join sites (a-side, b-side, sizes):
-    * callers pass a materialized (boundary or persisted) frame so
-    * the text-scan + explode + distinct upstream runs once, not three
-    * times — see [[ngramJaccardPairs]] / [[minhashNearDups]]. */
+  /** Exact Jaccard over per-shingle rows (doc_id, sh_hash) for given
+    * candidate pairs: |A ∩ B| via a co-occurrence join, |A ∪ B| =
+    * |A| + |B| - |A ∩ B|. The shingle input feeds THREE join sites (a-side,
+    * b-side, sizes): callers pass a materialized (boundary or persisted)
+    * frame so the text-scan + explode + distinct upstream runs once, not
+    * three times — see [[deltaNearDups]]. The batch paths
+    * ([[minhashNearDups]], [[containmentNearDups]]) verify on per-document
+    * arrays instead and never build these rows. */
   def jaccard(candidates: DataFrame, shingles: DataFrame): DataFrame = {
     val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = candidates
@@ -218,24 +238,64 @@ object Dedup {
     inter
       .join(sizes.select(col("doc_id").as("a_id"), col("sz").as("sz_a")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("sz").as("sz_b")), "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccardOf)
+  }
+
+  /** The MinHash LSH candidate pairs of a corpus with their exact shingle
+    * overlap: (a_id, b_id, inter, sz_a, sz_b), the rows [[jaccard]] derives
+    * from `shingleHashes → minhash → lshCandidates`, built from one row
+    * per document instead of one row per shingle.
+    *
+    *   - `hs` is the distinct shingle hashes of ALL rows carrying the id
+    *     (one doc-keyed aggregation of the per-row hash arrays, the
+    *     exchange [[shingleHashes]] pays for its per-id dedup), `sig` its
+    *     k minhashes; a document without a shingle has no row, as in
+    *     [[shingleHashes]]. The frame is cut once: the bands, both
+    *     verification sides and the hot-bucket count read it.
+    *   - band rows are the ⌈k/r⌉ slices of `sig`, keyed by [[bandKey]],
+    *     and candidates come from [[bandPairs]].
+    *   - |A ∩ B| is `size(array_intersect(hs_a, hs_b))`; pairs sharing no
+    *     shingle drop, as the co-occurrence join drops them. */
+  private def minhashOverlaps(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, r: Int, maxBucket: Long): DataFrame = {
+    val docs = df
+      .select(col(idCol).as("doc_id"),
+        graft.functions.vectors.shingle_hashes(col(textCol), n).as("hs"))
+      .groupBy("doc_id")
+      .agg(array_distinct(flatten(collect_list(col("hs")))).as("hs"))
+      .where(size(col("hs")) > 0)
+      .withColumn("sig", graft.functions.vectors.minhash_sig(col("hs"), k))
+      .boundary()
+    val bands = docs.select(col("doc_id"), posexplode(array(
+        (0 until (k + r - 1) / r).map(b =>
+          bandKey(slice(col("sig"), b * r + 1, r))): _*)).as(Seq("band", "sig")))
+    def side(s: String) =
+      docs.select(col("doc_id").as(s"${s}_id"), col("hs").as(s"hs_$s"))
+    bandPairs(bands, maxBucket)
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("inter"),
+        size(col("hs_a")).cast("long").as("sz_a"),
+        size(col("hs_b")).cast("long").as("sz_b"))
+      .where(col("inter") > 0)
   }
 
   /** Full MinHash-LSH near-dup pipeline: shingle -> minhash -> band ->
-    * candidates -> exact-Jaccard verification at `threshold`. */
+    * candidates -> exact-Jaccard verification at `threshold`, on one row
+    * per document ([[minhashOverlaps]]): no stage shuffles a row per
+    * shingle. Returns (a_id, b_id, jaccard), a_id < b_id — the rows of
+    * `jaccard(lshCandidates(minhash(shingleHashes(…), k), r, maxBucket),
+    * shingleHashes(…))` at `threshold`. */
   def minhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 12, r: Int = 3,
-      threshold: Double = 0.6, maxBucket: Long = 1000): DataFrame = {
-    val sh = shingleHashes(df, idCol, textCol, n)
-      .boundary()
-    val cands = lshCandidates(minhash(sh, k), r, maxBucket)
-    jaccard(cands, sh)
+      threshold: Double = 0.6, maxBucket: Long = 1000): DataFrame =
+    minhashOverlaps(df, idCol, textCol, n, k, r, maxBucket)
+      .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-  }
 
   /** Distinct char n-gram shingles of a (short) name column, hashed —
     * the blocking unit for fuzzy NAME matching, where word shingles are
@@ -331,9 +391,7 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("a_id").orderBy(col("jaccard").desc, col("b_row").asc)
     val best = inter.join(szA, "a_id").join(szB, "b_id")
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= threshold)
       .join(bRow, col("b_id") === col("b_name"))
       .withColumn("rn", row_number().over(w))
@@ -395,23 +453,21 @@ object Dedup {
     * for Jaccard — an excerpt buried in a LONG host may not collide in
     * any band, so recall for extreme ratios needs a lower `r` or a
     * dedicated suffix path ([[substrDedup]]); pairs that DO collide are
-    * verified exactly. Same scale shape as the Jaccard path.
+    * verified exactly. Same candidates and per-document scale shape as
+    * the Jaccard path ([[minhashOverlaps]]): no stage shuffles a row per
+    * shingle.
     *
     * Returns (a_id, b_id, containment) at `threshold`. */
   def containmentNearDups(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 12, r: Int = 3,
-      threshold: Double = 0.8, maxBucket: Long = 1000): DataFrame = {
-    val sh = shingleHashes(df, idCol, textCol, n)
-      .boundary()
-    val cands = lshCandidates(minhash(sh, k), r, maxBucket)
-    jaccard(cands, sh)
+      threshold: Double = 0.8, maxBucket: Long = 1000): DataFrame =
+    minhashOverlaps(df, idCol, textCol, n, k, r, maxBucket)
       .withColumn("containment",
         col("inter").cast("double") /
           least(col("sz_a"), col("sz_b")).cast("double"))
       .filter(col("containment") >= threshold)
       .select("a_id", "b_id", "containment")
-  }
 
   /** Persist the incremental-dedup index of a corpus: the band-signature
     * table bucketed by its probe key (band, sig) and the slim shingle set
@@ -654,13 +710,8 @@ object Dedup {
     // prune to buckets the delta touches BEFORE capping/joining
     val touched = all.join(newSigs.select("band", "sig").distinct(),
       Seq("band", "sig"), "left_semi")
-    val sigs = capBucketDf(touched, Seq("band", "sig"), maxBucket)
-    val cands = sigs.as("x").join(sigs.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id") &&
-          (col("x.is_new") || col("y.is_new")))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
+    val cands = bandPairs(touched, maxBucket,
+      col("x.is_new") || col("y.is_new"))
     // verification must stay delta-shaped too: only candidate docs'
     // shingle sets participate (sizes are still exact per doc — the semi
     // join keeps whole documents, never partial sets). Without this the

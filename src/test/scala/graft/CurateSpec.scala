@@ -438,4 +438,95 @@ class CurateSpec extends AnyFunSuite {
     assert(out(5L) == ((false, true, true, true))) // clusters with 1-3
     assert(out(6L) == ((true, true, false, true)))
   }
+
+  test("soft404Flags: a repeated id shares one fingerprint; null id and " +
+      "null domain never cluster") {
+    import spark.implicits._
+    import graft.operators.{Dedup, TextAnalysis}
+    // the token-row formulation: explode, Dedup.simhash per id, join back,
+    // count per (domain, simhash), join again
+    def reference(df: org.apache.spark.sql.DataFrame) = {
+      val toks = df.select(col("id").as("doc_id"),
+        explode(TextAnalysis.tokens(coalesce(col("text"), lit("")))).as("tok"))
+      val keyed = df.join(Dedup.simhash(toks).withColumnRenamed("doc_id", "id"),
+        Seq("id"), "left")
+      val clusters = keyed.where(col("simhash").isNotNull)
+        .groupBy(col("domain"), col("simhash")).agg(count(lit(1)).as("cluster_n"))
+      val lead = lower(concat(coalesce(col("title"), lit("")), lit(" "),
+        substring(coalesce(col("text"), lit("")), 1, Curate.Soft404LeadChars)))
+      keyed.join(clusters, Seq("domain", "simhash"), "left")
+        .withColumn("phrase_hit",
+          Curate.Soft404Phrases.map(p => instr(lead, p) > 0).reduce(_ || _))
+        .withColumn("near_empty", length(coalesce(col("text"), lit(""))) < 200)
+        .withColumn("template_dup",
+          coalesce(col("cluster_n") >= 3L, lit(false)))
+        .withColumn("soft404",
+          col("phrase_hit") || (col("near_empty") && col("template_dup")))
+    }
+    val off = "service offline"
+    val rows = Seq[(Option[Long], String, String, String)](
+      // id 1 over two identical rows + id 2: a cluster of three rows
+      (Some(1L), "u.com", "T", off), (Some(1L), "u.com", "T", off),
+      (Some(2L), "u.com", "T", off),
+      // id 3 pools a second body, so its fingerprint leaves ids 4-5's
+      // cluster of two: no row of v.com is a template
+      (Some(3L), "v.com", "T", off), (Some(3L), "v.com", "T", "other words here"),
+      (Some(4L), "v.com", "T", off), (Some(5L), "v.com", "T", off),
+      // null ids: no fingerprint, never a template
+      (None, "w.com", "T", off), (None, "w.com", "T", off),
+      (None, "w.com", "404 Not Found", off),
+      // null domain: fingerprinted but never clustered
+      (Some(6L), null, "T", off), (Some(7L), null, "T", off),
+      (Some(8L), null, "T", off),
+      // null and empty text pooled under one id
+      (Some(9L), "x.com", "T", null), (Some(9L), "x.com", "T", ""),
+      (Some(10L), "x.com", "T", null)
+    ).toDF("id", "domain", "title", "text")
+    def flags(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "domain", "text", "phrase_hit", "near_empty",
+          "template_dup", "soft404")
+        .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val got = flags(Curate.soft404Flags(rows, "id", "domain", "title", "text"))
+    assert(got == flags(reference(rows)))
+    assert(got.size == rows.count())
+    val dup = Curate.soft404Flags(rows, "id", "domain", "title", "text")
+      .groupBy("domain").agg(max(col("template_dup").cast("int")).as("d"))
+      .collect().map(r => Option(r.getString(0)) -> r.getInt(1)).toMap
+    assert(dup == Map(Some("u.com") -> 1, Some("v.com") -> 0,
+      Some("w.com") -> 0, None -> 0, Some("x.com") -> 1))
+  }
+
+  test("dedupCorpus survivors are their own leakage-safe roots; the split " +
+      "is hashSplit") {
+    import graft.operators.Dedup
+    // exact copies in clusters of three, plus near-copies (one token
+    // dropped) so the pair graph has chains, not only cliques
+    val toks = graft.operators.TextAnalysis.tokens(col("text"))
+    val corpus = docs
+      .unionByName(docs.filter(col("doc_id") % 10 === 0)
+        .withColumn("doc_id", col("doc_id") + 100000))
+      .unionByName(docs.filter(col("doc_id") % 10 === 0)
+        .withColumn("doc_id", col("doc_id") + 200000))
+      .unionByName(docs.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 300000).as("doc_id"),
+          array_join(slice(toks, 2, 1000), " ").as("text")))
+      .localCheckpoint()
+    val pairs = Dedup.minhashNearDups(corpus, "doc_id", "text",
+      threshold = 0.6).localCheckpoint()
+    val survivors = Dedup.dedupCorpus(corpus, "doc_id", pairs).localCheckpoint()
+    assert(survivors.count() < corpus.count(), "no near-dup was removed")
+    val clustered = pairs.select(col("a_id").as("doc_id"))
+      .unionByName(pairs.select(col("b_id").as("doc_id"))).distinct()
+    assert(survivors.join(clustered, "doc_id").count() > 0,
+      "no survivor is in a pair")
+    val safe = Curate.leakageSafeSplit(survivors.select("doc_id"), "doc_id", pairs)
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap
+    val plain = Curate.hashSplit(survivors.select("doc_id"), "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(safe.keySet == plain.keySet)
+    safe.foreach { case (id, (root, split)) =>
+      assert(root == id, s"survivor $id has root $root")
+      assert(split == plain(id), s"survivor $id: split $split, hashSplit ${plain(id)}")
+    }
+  }
 }

@@ -42,6 +42,112 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("per-document MinHash near-dups == the per-shingle chain (law)") {
+    import spark.implicits._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val word = Gen.oneOf((0 until 40).map(i => s"w$i"))
+    val doc = Gen.choose(12, 30).flatMap(Gen.listOfN(_, word))
+    val corpus = for {
+      bases <- Gen.listOfN(10, doc)
+      edits <- Gen.listOfN(10, Gen.choose(0, 29))
+      hot <- doc
+      warm <- doc
+      extra <- Gen.listOfN(3, word)
+    } yield {
+      def near(ws: List[String], e: Int) = ws.updated(e % ws.size, "zz")
+      val rows = bases.zipWithIndex.map { case (ws, i) => (Option(i + 1L), ws) } ++
+        // planted near-copies: one token changed
+        bases.zip(edits).zipWithIndex.map { case ((ws, e), i) =>
+          (Option(i + 11L), near(ws, e)) } ++
+        // a hot band: five identical documents, every bucket over the cap
+        (21L to 25L).map(i => (Option(i), hot)) ++
+        // three copies plus a null-id copy: its buckets hold four rows
+        (26L to 28L).map(i => (Option(i), warm)) :+ (None, warm)
+      rows.map { case (id, ws) => (id, Option(ws.mkString(" "))) } ++ Seq(
+        // one id over two rows: a copy of doc 1 and a short extra doc
+        (Option(29L), Option(bases.head.mkString(" "))),
+        (Option(29L), Option(extra.mkString(" "))),
+        // null, empty, blank and sub-n text: no shingles, no row
+        (Option(30L), None), (Option(31L), Option("")),
+        (Option(32L), Option("   ")), (Option(33L), Option("w1 w2")))
+    }
+    var nearFound = 0
+    var repeatedPaired = 0
+    // (n, r) per seed; r = 5 leaves a two-minhash tail band at k = 12
+    for ((seed, n, r) <- Seq((1L, 3, 3), (2L, 2, 5), (3L, 3, 2))) {
+      val df = corpus.pureApply(Gen.Parameters.default, Seed(seed))
+        .toDF("doc_id", "text")
+      val maxBucket = 3L
+      // the per-shingle reference: shingleHashes -> minhash ->
+      // lshCandidates -> jaccard
+      val sh = Dedup.shingleHashes(df, "doc_id", "text", n).localCheckpoint()
+      val ref = Dedup.jaccard(
+          Dedup.lshCandidates(Dedup.minhash(sh, 12), r, maxBucket), sh)
+        .withColumn("containment",
+          col("inter").cast("double") /
+            least(col("sz_a"), col("sz_b")).cast("double"))
+        .localCheckpoint()
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+          .toSeq.sorted
+      for (t <- Seq(0.0, 0.5)) {
+        val want = rows(ref.where(col("jaccard") >= t)
+          .select("a_id", "b_id", "jaccard"))
+        assert(rows(Dedup.minhashNearDups(df, "doc_id", "text", n = n, k = 12,
+          r = r, threshold = t, maxBucket = maxBucket)) == want,
+          s"seed $seed jaccard >= $t")
+        val wantC = rows(ref.where(col("containment") >= t)
+          .select("a_id", "b_id", "containment"))
+        assert(rows(Dedup.containmentNearDups(df, "doc_id", "text", n = n,
+          k = 12, r = r, threshold = t, maxBucket = maxBucket)) == wantC,
+          s"seed $seed containment >= $t")
+        if (t == 0.0) {
+          nearFound += want.count { case (a, b, _) => b == a + 10 }
+          if (want.exists(p => p._1 == 29L || p._2 == 29L)) repeatedPaired += 1
+          assert(!want.exists(p => p._1 >= 21L && p._2 <= 28L),
+            s"seed $seed: a capped group paired")
+        }
+      }
+    }
+    // the planted shapes reached the comparison: near-copy pairs found and
+    // the repeated id paired (both are probabilistic per seed)
+    assert(nearFound >= 10, s"$nearFound near-copy pairs over three seeds")
+    assert(repeatedPaired >= 1, "the repeated id was never a candidate")
+  }
+
+  test("SimHashSig over a token array == Dedup.simhash over its token rows") {
+    import spark.implicits._
+    // negative ids: the documents table holds the positive ones
+    val texts = Seq(
+      (-1L, "a a a b b c"), (-2L, "the quick brown fox the lazy dog the end"),
+      (-3L, ""), (-4L, "   "), (-5L, "unicode κόσμος emoji 😀 漢字 ok"),
+      (-6L, "repeat repeat repeat repeat")).toDF("doc_id", "text")
+      .unionByName(docs)
+    val arrays = texts.select(col("doc_id"),
+        TextAnalysis.tokens(col("text")).as("toks"))
+      // a null token and an empty array, which tokens() never yields
+      .unionByName(Seq(-7L).toDF("doc_id").select(col("doc_id"),
+        array(lit("x"), lit(null).cast("string"), lit("y")).as("toks")))
+      .unionByName(Seq(-8L).toDF("doc_id").select(col("doc_id"),
+        array().cast("array<string>").as("toks")))
+    val kernel = arrays.select(col("doc_id"),
+        graft.functions.vectors.simhash_sig(col("toks")).as("k"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val viaRows = Dedup.simhash(arrays.select(col("doc_id"),
+        explode(col("toks")).as("tok")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(kernel.size > 50)
+    kernel.foreach { case (id, k) =>
+      assert(k == viaRows.get(id), s"doc $id: kernel $k, token rows ${viaRows.get(id)}")
+    }
+    assert(kernel(-8L).isEmpty, "an empty array has no fingerprint")
+    assert(kernel(-3L).isDefined, "the \"\" token of empty text votes")
+    for (b <- Seq(30, 31))
+      assert(viaRows.values.exists(v => ((v >>> b) & 1L) == 1L) &&
+        viaRows.values.exists(v => ((v >>> b) & 1L) == 0L), s"bit $b constant")
+  }
+
   test("exact dedup finds exactly the planted copies") {
     val expected = docs.filter(col("doc_id") % 10 === 0).count()
     val dups = Dedup.exact(withExactCopies, "doc_id", "text").collect()

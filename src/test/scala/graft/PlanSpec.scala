@@ -309,6 +309,29 @@ class PlanSpec extends AnyFunSuite {
       "un-partitioned (single-reducer) window in packSequences")
   }
 
+  test("MinHash near-dup plans shuffle no per-shingle rows") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // the child columns of every exchange of the composed (inlined) plan
+    def exchanged(p: SparkPlan): Seq[Seq[String]] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => exchanged(a.executedPlan)
+      case e: Exchange => Seq(e.child.output.map(_.name))
+      case _ => Nil
+    }
+    val docs = Tables.table(spark, dir, "documents").select("doc_id", "text")
+    for ((name, near) <- Seq(
+        "minhashNearDups" -> (() => graft.operators.Dedup.minhashNearDups(
+          docs, "doc_id", "text")),
+        "containmentNearDups" -> (() => graft.operators.Dedup
+          .containmentNearDups(docs, "doc_id", "text")))) {
+      val cols = BlockScope.inlined(exchanged(near().queryExecution.executedPlan))
+      assert(cols.nonEmpty, s"$name: no exchange found")
+      assert(!cols.exists(_.contains("sh_hash")),
+        s"$name shuffles per-shingle rows: ${cols.mkString("; ")}")
+    }
+  }
+
   test("incremental near-dup prunes untouched buckets with a semi join") {
     val docs = Tables.table(spark, dir, "documents").select("doc_id", "text")
     val newBatch = docs.filter(col("doc_id") % 5 === 0)
